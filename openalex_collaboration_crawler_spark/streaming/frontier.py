@@ -21,9 +21,13 @@ state_dir/
   seen/b{K}/          (url_hash)        -- APPEND-ONLY delta per batch;
                        the full seen set is the union of deltas, so
                        per-batch write cost is O(|delta|), not O(seen)
-  bloom/v{N}/         (part, blob)      -- incremental fixed-size Bloom
-                       blobs per hash partition, OR-merged with each
-                       delta (never rebuilt over the full set)
+  bloom/v{N}/         (part, words)     -- incremental fixed-size Bloom
+                       filter per hash partition as an array<bigint> of
+                       m_bits/64 words, OR-merged with each delta in
+                       plain Spark SQL (never rebuilt over the full
+                       set); the commit's bloom_format names its layout
+                       and (parts, m_bits, k) -- any other recorded
+                       format is rebuilt from the seen union
   results/batch={k}/  (seq, url, ..., text, lang, n_links, batch_id)
   metrics/batch={k}/  per-partition lineage + fetch/dedup/parse counters
   _commits/{N}.json   atomic commit marker (written last)
@@ -51,7 +55,7 @@ order — the parity contract checked against the sequential oracle in
 tests/test_crawl_parity.py.
 
 At 10^10 URLs: pending/seen are hash-partitioned Iceberg tables; the
-seen union is compacted by table maintenance; bloom blobs are sized
+seen union is compacted by table maintenance; bloom filters are sized
 m_bits ≈ 10 × capacity/partition; hot hosts are capped by politeness
 *before* any heavy work.
 """
@@ -82,15 +86,17 @@ from openalex_collaboration_crawler_spark.streaming.politeness import (
     with_robots_blocked,
 )
 from openalex_collaboration_crawler_spark.streaming.seen import (
+    BLOOM_SCHEMA,
+    bloom_format,
+    build_bloom_table,
+    check_bloom_params,
     mark_new_against_seen,
-    merge_bloom_tables,
 )
 
 PENDING_SCHEMA = (
     "url string, url_hash bigint, host string, depth int, priority int, batch_enqueued int"
 )
 SEEN_SCHEMA = "url_hash bigint"
-BLOOM_SCHEMA = "part int, blob binary"
 
 PARSE_SCHEMA = (
     "seq long, url string, url_hash long, host string, depth int, "
@@ -122,7 +128,12 @@ def _ref_lit_int(v: int):
     inlined primitive. ``shuffle()`` would do the same but draws a
     random per-analysis seed that gets inlined, defeating the purpose.
     Verified: new values trigger 0 new stage compiles vs 2 for
-    ``F.lit`` (tests/test_crawl_parity.py::test_ref_lit_int)."""
+    ``F.lit`` (tests/test_crawl_parity.py::test_ref_lit_int).
+
+    Use it only in a plan's top-level output projection (the columns a
+    write emits), never below a filter or join. The ``rand`` makes its
+    Project nondeterministic, which stops predicate pushdown and project
+    collapsing through it: a filter above it would stay above it."""
     return F.element_at(F.lit([v]), (F.rand(42) * 0 + 1).cast("int"))
 
 
@@ -315,6 +326,12 @@ class CrawlEngine:
     _pool: object | None = field(default=None, repr=False)
     _saved_conf: dict | None = field(default=None, repr=False)
 
+    def __post_init__(self) -> None:
+        check_bloom_params(self.bloom_m_bits, self.bloom_k)
+
+    def _bloom_format(self) -> dict:
+        return bloom_format(self.bloom_parts, self.bloom_m_bits, self.bloom_k)
+
     _COALESCE_KEY = "spark.sql.adaptive.coalescePartitions.enabled"
     _ADAPTIVE_KEY = "spark.sql.adaptive.enabled"
     _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
@@ -481,14 +498,19 @@ class CrawlEngine:
     def _load_bloom(self, version: int) -> DataFrame:
         return self.spark.read.schema(BLOOM_SCHEMA).parquet(self._path("bloom", f"v{version}"))
 
-    def _ensure_bloom(self, version: int, seen_union: DataFrame) -> DataFrame:
-        """Blobs for this version — built ONCE from the full seen union
+    def _ensure_bloom(
+        self, version: int, seen_union: DataFrame, committed_format: dict | None
+    ) -> DataFrame:
+        """Bloom table for this version — built from the full seen union
         when the engine first crosses into bloom mode (earlier batches
-        ran the exact-join path and kept no blobs)."""
+        ran the exact-join path and kept no table), and rebuilt when the
+        commit records another format than this engine's: a legacy
+        ``(part, blob)`` dir or other (parts, m_bits, k) would read as
+        null or misaligned words, probing every candidate wrongly and
+        dropping the old bits on the next merge."""
         path = self._path("bloom", f"v{version}")
-        if not os.path.isdir(path):
-            merge_bloom_tables(
-                None,
+        if committed_format != self._bloom_format() or not os.path.isdir(path):
+            build_bloom_table(
                 seen_union,
                 n_parts=self.bloom_parts,
                 m_bits=self.bloom_m_bits,
@@ -989,7 +1011,7 @@ class CrawlEngine:
         seen_rows = int(prev.get("seen_rows", 0))
         bloom_mode = self.use_bloom and seen_rows >= self.bloom_min_seen
         if bloom_mode:
-            bloom = self._ensure_bloom(v, seen_union).cache()
+            bloom = self._ensure_bloom(v, seen_union, prev.get("bloom_format")).cache()
             # survivor-set size this batch is provably ≤ links_total —
             # THIS batch's pre-dedup outlink count, observed for free
             # on the results write. Broadcast when the bound is small;
@@ -1015,11 +1037,13 @@ class CrawlEngine:
                 seen_union,
                 bloom,
                 n_parts=self.bloom_parts,
+                m_bits=self.bloom_m_bits,
+                k=self.bloom_k,
                 survivor_join=survivor_join,
             ).persist()
         else:
             # small seen set: ONE co-partitioned join beats the Bloom
-            # machinery's serial broadcast/python job launches
+            # machinery's extra broadcast and merge jobs
             bloom = None
             marked = (
                 discovered.join(
@@ -1094,12 +1118,12 @@ class CrawlEngine:
 
         def j_bloom():
             if bloom_mode:
-                merge_bloom_tables(
-                    bloom,
+                build_bloom_table(
                     new_urls.select("url_hash"),
                     n_parts=self.bloom_parts,
                     m_bits=self.bloom_m_bits,
                     k=self.bloom_k,
+                    prev=bloom,
                 ).write.mode("overwrite").parquet(self._path("bloom", f"v{batch_id}"))
 
         # ---- phase 2: the pending write MATERIALIZES `marked` (and its
@@ -1135,6 +1159,7 @@ class CrawlEngine:
             "pending_base": batch_id if compact_pending else pending_base_prev,
             "pending_dels": 0 if compact_pending else dels_after,
             "bloom_mode": bloom_mode,
+            "bloom_format": self._bloom_format() if bloom_mode else None,
             "done": pending_rows == 0,
         }
         batch.unpersist()

@@ -9,22 +9,25 @@ At 10^10 URLs neither fits one machine, so:
   url_hashes against the seen table — distributed, spill-safe,
   co-partitioned on ``pmod(url_hash, P)``.
 - **Efficiency** comes from a *partitioned Bloom prefilter*: one
-  numpy bit-array blob per hash-partition, built with
-  ``applyInPandas`` (Arrow-vectorized; no per-row Python). Probing
-  drops the overwhelming majority of already-seen candidates before
-  they reach the anti-join shuffle. False positives are safe — the
-  anti-join is still consulted only for *survivors*' exactness; false
-  negatives cannot occur.
+  ``array<bigint>`` of ``m_bits / 64`` words per hash partition, built,
+  OR-merged and probed in plain Spark SQL (explode → ``bit_or`` per word
+  → ordered ``collect_list``; probe = k codegen'd ``element_at`` bit
+  tests), so neither the dedup nor the filter maintenance starts a
+  Python worker or crosses Arrow. Probing drops the overwhelming
+  majority of already-seen candidates before they reach the exact
+  check. False positives are safe — the exact check is still consulted
+  for *survivors*; false negatives cannot occur. The numpy
+  ``fixed_bloom_build_blob`` is the reference the tests compare the JVM
+  words against bit for bit.
 - **Deletions** (recrawl policies) break Blooms, so a partition-local
   **cuckoo filter** (vectorized numpy, 4-slot buckets, 16-bit
   fingerprints) is provided as the fallback with the same
   build/probe API plus ``delete``.
 
-Partitioning: blobs are keyed by ``part = pmod(url_hash, n_parts)``;
-candidates repartition on the same key, so probe is a 1:1
-co-partitioned join of each candidate slice with exactly one blob —
-no broadcast of the full filter, which at 10^10 keys would be tens
-of GB.
+Partitioning: filter rows are keyed by ``part = pmod(url_hash,
+n_parts)`` and candidates join them on the same key. Spark broadcasts
+the table while it is small and shuffle-joins it when it is not, so the
+full filter — tens of GB at 10^10 keys — is never broadcast.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ------------------------------------------------------------- bloom core
@@ -81,9 +84,11 @@ def bloom_probe_blob(blob: bytes, hashes: np.ndarray) -> np.ndarray:
 
 
 def fixed_bloom_build_blob(hashes: np.ndarray, m_bits: int, k: int) -> bytes:
-    """Bloom blob with caller-pinned (m, k) — OR-mergeable across
-    builds, enabling incremental maintenance (new deltas OR into the
-    standing blob instead of rebuilding over the full seen set)."""
+    """Bloom blob with caller-pinned (m, k): a 16-byte (m, k) header,
+    then bit ``pos`` at bit ``pos % 8`` of byte ``pos // 8``. The numpy
+    reference for :func:`build_bloom_table`, whose words are these
+    bytes read as little-endian int64. It is also the older on-disk
+    ``(part, blob)`` layout, which the crawl engine detects and rebuilds."""
     bits = np.zeros(m_bits // 8, dtype=np.uint8)
     if len(hashes):
         pos = _bloom_positions(np.asarray(hashes), m_bits, k).ravel()
@@ -92,111 +97,118 @@ def fixed_bloom_build_blob(hashes: np.ndarray, m_bits: int, k: int) -> bytes:
     return header + bits.tobytes()
 
 
-def bloom_or_blobs(a: bytes | None, b: bytes | None) -> bytes | None:
-    if a is None:
-        return b
-    if b is None:
-        return a
-    ha, hb = a[:16], b[:16]
-    assert ha == hb, "bloom OR-merge requires identical (m,k)"
-    bits = np.frombuffer(a[16:], dtype=np.uint8) | np.frombuffer(b[16:], dtype=np.uint8)
-    return ha + bits.tobytes()
+# ------------------------------------------------ bloom on Spark (JVM only)
+
+BLOOM_SCHEMA = "part int, words array<bigint>"
 
 
-def merge_bloom_tables(
-    prev: DataFrame | None,
-    new_hashes: DataFrame,
+def bloom_format(n_parts: int, m_bits: int, k: int) -> dict:
+    """Identity of a Bloom table's layout and parameters. The crawl
+    engine records it in each commit next to ``bloom/v{N}``; a table
+    whose recorded format differs (or is missing) is rebuilt instead of
+    read, because any other layout would probe as "never seen"."""
+    return {"layout": "words", "parts": n_parts, "m_bits": m_bits, "k": k}
+
+
+def check_bloom_params(m_bits: int, k: int) -> None:
+    """The JVM bit-position arithmetic masks with ``m_bits - 1``, which
+    equals ``mod m_bits`` only for powers of two; a word holds 64 bits."""
+    if m_bits < 64 or m_bits & (m_bits - 1):
+        raise ValueError(f"bloom m_bits must be a power of two >= 64, got {m_bits}")
+    if k < 1:
+        raise ValueError(f"bloom k must be >= 1, got {k}")
+
+
+def _bloom_position_cols(h: Column, m_bits: int, k: int) -> list[Column]:
+    """The k bit positions of :func:`_bloom_positions`, in signed int64:
+    with M = m_bits - 1 a power-of-two mask, ``x & M`` is ``x mod m``
+    on the unsigned bit pattern and ``>>>`` is the unsigned shift."""
+    mask = F.lit(m_bits - 1).cast("bigint")
+    h1 = h.bitwiseAND(mask)
+    h2 = F.shiftrightunsigned(h, 17).bitwiseOR(F.lit(1).cast("bigint")).bitwiseAND(mask)
+    return [(h1 + h2 * j).bitwiseAND(mask) for j in range(k)]
+
+
+def _bit(p: Column) -> Column:
+    """The one-bit bigint mask of position ``p`` inside its word."""
+    return F.call_function("shiftleft", F.lit(1).cast("bigint"), p.bitwiseAND(63).cast("int"))
+
+
+def build_bloom_table(
+    hashes: DataFrame,
     hash_col: str = "url_hash",
     n_parts: int = 32,
     m_bits: int = 1 << 20,
     k: int = 5,
+    prev: DataFrame | None = None,
 ) -> DataFrame:
-    """Incremental per-partition blobs: build fixed-size blooms over
-    the new delta and OR them into the previous blobs. One small
-    shuffle on ``part`` (the delta), never a rescan of the full seen
-    set — the maintenance cost per batch is O(|delta| + n_parts)."""
+    """(part, words) Bloom table over ``hashes``, OR-ed into ``prev``.
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["part"].iloc[0]) if len(pdf) else 0
-        blob = fixed_bloom_build_blob(
-            pdf["h"].to_numpy(np.int64).view(np.uint64), m_bits, k
-        )
-        return pd.DataFrame({"part": [part], "blob": [blob]})
-
-    keyed = new_hashes.select(
-        F.col(hash_col).alias("h"), F.pmod(F.col(hash_col), F.lit(n_parts)).alias("part")
-    )
-    delta = keyed.groupBy("part").applyInPandas(build, schema="part int, blob binary")
+    Part ``p`` holds the bits of :func:`fixed_bloom_build_blob` over the
+    hashes with ``pmod(h, n_parts) = p``, as ``m_bits / 64`` little-endian
+    words: bit ``pos`` is bit ``pos & 63`` of word ``pos >> 6``. The
+    standing words (``prev``, or zeros for a fresh build) are exploded to
+    one row per word, unioned with one row per new bit, OR-ed per word
+    and collected back in word order — plain Spark SQL, no Python
+    worker. Incremental maintenance thus costs O(|hashes| + table), never
+    a rescan of the full seen set."""
+    check_bloom_params(m_bits, k)
+    n_words = m_bits // 64
     if prev is None:
-        return delta
-    both = prev.select("part", "blob").unionByName(delta)
-
-    def or_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = None
-        for b in pdf["blob"]:
-            blob = bloom_or_blobs(blob, None if b is None else bytes(b))
-        return pd.DataFrame({"part": [int(pdf["part"].iloc[0])], "blob": [blob]})
-
-    return both.groupBy("part").applyInPandas(or_group, schema="part int, blob binary")
-
-
-# --------------------------------------------------------- bloom on Spark
-
-
-def build_bloom_table(
-    seen: DataFrame, hash_col: str = "url_hash", n_parts: int = 32, fpp: float = 0.01
-) -> DataFrame:
-    """(part, blob): one Bloom blob per hash partition of the seen set."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["part"].iloc[0]) if len(pdf) else 0
-        blob = bloom_build_blob(pdf["h"].to_numpy(np.int64).view(np.uint64), fpp)
-        return pd.DataFrame({"part": [part], "blob": [blob]})
-
-    keyed = seen.select(
-        F.col(hash_col).alias("h"), F.pmod(F.col(hash_col), F.lit(n_parts)).alias("part")
+        prev_words = hashes.sparkSession.range(n_parts * n_words).select(
+            F.shiftright("id", n_words.bit_length() - 1).cast("int").alias("part"),
+            F.col("id").bitwiseAND(n_words - 1).cast("int").alias("w"),
+            F.lit(0).cast("bigint").alias("word"),
+        )
+    else:
+        prev_words = prev.select("part", F.posexplode("words").alias("w", "word"))
+    h = F.col(hash_col)
+    new_words = hashes.select(
+        F.pmod(h, F.lit(n_parts)).cast("int").alias("part"),
+        F.explode(F.array(*_bloom_position_cols(h, m_bits, k))).alias("pos"),
+    ).select(
+        "part",
+        F.shiftright("pos", 6).cast("int").alias("w"),
+        _bit(F.col("pos")).alias("word"),
     )
-    return keyed.groupBy("part").applyInPandas(build, schema="part int, blob binary")
+    # one exchange on part serves both aggregations (a hash partitioning
+    # on part also clusters every (part, w)); letting each aggregation
+    # shuffle on its own keys measured 0.73 vs 0.55 s per merge of 25k
+    # new bits into 16 parts x 2^20 bits (local[4], 4-core x86 VM)
+    return (
+        prev_words.unionByName(new_words)
+        .repartition("part")
+        .groupBy("part", "w")
+        .agg(F.bit_or("word").alias("word"))
+        .groupBy("part")
+        .agg(F.sort_array(F.collect_list(F.struct("w", "word"))).alias("ws"))
+        .select("part", F.col("ws.word").alias("words"))
+    )
 
 
-def bloom_filter_candidates(
+def _bloom_flag(
     candidates: DataFrame,
     bloom_table: DataFrame,
-    hash_col: str = "url_hash",
-    n_parts: int = 32,
+    hash_col: str,
+    n_parts: int,
+    m_bits: int,
+    k: int,
 ) -> DataFrame:
-    """Returns candidates + a ``maybe_seen`` flag; callers treat
-    ``~maybe_seen`` rows as definitely-new (Bloom has no false
-    negatives) and exact-check only the maybe-seen survivors.
-
-    Implemented as a ``cogroup`` on ``part``: each hash partition of
-    the candidates meets its single blob row exactly once — the blob
-    (100s of KB) is NEVER replicated per candidate row, and the probe
-    itself is one vectorized numpy pass per group."""
-    keyed = candidates.withColumn(
-        "part", F.pmod(F.col(hash_col), F.lit(n_parts)).cast("int")
-    )
-    schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in keyed.schema.fields)
-        + ", maybe_seen boolean"
-    )
-    cols = [f.name for f in keyed.schema.fields]
-
-    def probe(cand_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = cand_pdf[cols].copy()
-        if len(blob_pdf) and blob_pdf["blob"].iloc[0] is not None:
-            blob = bytes(blob_pdf["blob"].iloc[0])
-            h = cand_pdf[hash_col].to_numpy(np.int64).view(np.uint64)
-            out["maybe_seen"] = bloom_probe_blob(blob, h)
-        else:
-            out["maybe_seen"] = False
-        return out
-
-    return (
-        keyed.groupBy("part")
-        .cogroup(bloom_table.groupBy("part"))
-        .applyInPandas(lambda key, c, b: probe(c, b), schema=schema)
-    )
+    """Candidates + ``maybe_seen``: each candidate meets its part's words
+    in an equi-join on ``part`` (Spark broadcasts the table when it is
+    small and shuffles both sides when it is not, so the filter is never
+    replicated per row at scale), and the flag is a codegen'd AND of k
+    single-bit word tests. A part without words probes as maybe-seen,
+    which only sends its candidates to the exact check."""
+    h = F.col(hash_col)
+    keyed = candidates.withColumn("part", F.pmod(h, F.lit(n_parts)).cast("int"))
+    joined = keyed.join(bloom_table.select("part", "words"), "part", "left")
+    hit = None
+    for p in _bloom_position_cols(h, m_bits, k):
+        word = F.element_at("words", F.shiftright(p, 6).cast("int") + 1)
+        term = word.bitwiseAND(_bit(p)) != 0
+        hit = term if hit is None else hit & term
+    return joined.withColumn("maybe_seen", F.coalesce(hit, F.lit(True))).drop("words", "part")
 
 
 def mark_new_against_seen(
@@ -205,6 +217,8 @@ def mark_new_against_seen(
     bloom_table: DataFrame,
     hash_col: str = "url_hash",
     n_parts: int = 32,
+    m_bits: int = 1 << 20,
+    k: int = 5,
     survivor_join: str = "broadcast",
 ) -> DataFrame:
     """Candidates + exact ``is_new`` flag. Bloom probe first; only the
@@ -221,9 +235,15 @@ def mark_new_against_seen(
         at 10^10 scale). On a real deployment the seen table is
         bucketed on the hash, so "shuffle" moves only the candidates.
 
+    The flagged candidates feed both the survivor set and the final
+    join, so the probe is planned twice; both copies read the same
+    reused candidate exchange and the same broadcast filter, so only the
+    codegen'd bit tests themselves run twice.
+
     Callers should ``.cache()`` the result before taking multiple
     actions on it (the probe + scans re-execute otherwise)."""
-    flagged = bloom_filter_candidates(candidates, bloom_table, hash_col, n_parts)
+    check_bloom_params(m_bits, k)
+    flagged = _bloom_flag(candidates, bloom_table, hash_col, n_parts, m_bits, k)
     survivors = flagged.where(F.col("maybe_seen")).select(hash_col)
     if survivor_join == "broadcast":
         matched = (
@@ -240,7 +260,7 @@ def mark_new_against_seen(
         )
         out = flagged.join(matched, hash_col, "left")
     out = out.withColumn("is_new", ~F.col("maybe_seen") | F.col("__matched").isNull())
-    return out.drop("__matched", "maybe_seen", "part")
+    return out.drop("__matched", "maybe_seen")
 
 
 # ------------------------------------------------------------ cuckoo core
@@ -374,6 +394,8 @@ def dedup_against_seen(
     bloom_table: DataFrame | None = None,
     hash_col: str = "url_hash",
     n_parts: int = 32,
+    m_bits: int = 1 << 20,
+    k: int = 5,
 ) -> DataFrame:
     """Exactly-new candidates: Bloom prefilter (optional) then an
     exact check on the seen table. The prefilter's definitely-new
@@ -385,5 +407,7 @@ def dedup_against_seen(
     anti-join. Net shuffle volume: zero; seen is only ever scanned."""
     if bloom_table is None:
         return candidates.join(seen.select(hash_col), hash_col, "left_anti")
-    marked = mark_new_against_seen(candidates, seen, bloom_table, hash_col, n_parts)
+    marked = mark_new_against_seen(
+        candidates, seen, bloom_table, hash_col, n_parts, m_bits, k
+    )
     return marked.where(F.col("is_new")).drop("is_new")

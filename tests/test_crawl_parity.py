@@ -182,6 +182,53 @@ def test_bloom_forced_same_result(spark, world, oracle_run):
     assert eng.seen_hashes() == oracle_run.seen
 
 
+def test_legacy_bloom_format_rebuilt_on_resume(spark, world, oracle_run):
+    """State written before the word-array Bloom layout: bloom/v{N} holds
+    ``(part, blob)`` numpy blobs and the commit records no bloom_format.
+    Read with the words schema it would give null words; the engine must
+    rebuild it from the seen union and still match the oracle."""
+    import json
+    import os
+
+    import numpy as np
+
+    from openalex_collaboration_crawler_spark.streaming.seen import fixed_bloom_build_blob
+
+    eng1 = _mk_engine(spark, world, "engine_legacy_bloom", bloom_min_seen=0)
+    eng1.init_from_seeds(world["seeds"])
+    for _ in range(2):
+        eng1.run_batch()
+    v = eng1.last_version()
+    assert eng1._read_commit(v).get("bloom_format") is not None
+    hashes = np.array(sorted(eng1.seen_hashes()), dtype=np.int64)
+    blobs = [
+        (
+            part,
+            fixed_bloom_build_blob(
+                hashes[np.mod(hashes, eng1.bloom_parts) == part].view(np.uint64),
+                eng1.bloom_m_bits,
+                eng1.bloom_k,
+            ),
+        )
+        for part in range(eng1.bloom_parts)
+    ]
+    spark.createDataFrame(blobs, "part int, blob binary").write.mode("overwrite").parquet(
+        eng1._path("bloom", f"v{v}")
+    )
+    commit_path = os.path.join(eng1._commit_dir(), f"{v}.json")
+    with open(commit_path) as f:
+        payload = json.load(f)
+    del payload["bloom_format"]
+    with open(commit_path, "w") as f:
+        json.dump(payload, f)
+
+    eng2 = _mk_engine(spark, world, "engine_legacy_bloom", bloom_min_seen=0)
+    metrics = eng2.run(max_batches=50)
+    assert all(m.get("bloom_mode") for m in metrics if m.get("fetched"))
+    assert eng2.crawl_order() == oracle_run.order
+    assert eng2.seen_hashes() == oracle_run.seen
+
+
 def test_range_rank_path_same_result(spark, world, oracle_run, monkeypatch):
     """Force the two-phase parallel range rank (the 10^10-scale path;
     small batches normally take the single-partition window) through
@@ -384,7 +431,14 @@ def test_ref_lit_int(spark):
     The helper exists so per-batch ids don't force a fresh Janino
     compile per batch (frontier._ref_lit_int docstring): a new VALUE
     through the same plan shape must trigger ZERO new stage compiles,
-    while a plain F.lit control shows the counter is live."""
+    while a plain F.lit control shows the counter is live.
+
+    Coupled to the Spark version (written against 4.1): the zero-compile
+    result holds only while Catalyst has no ``x * 0`` simplification for
+    non-foldable expressions and keeps ``rand`` flagged nondeterministic.
+    If an upgrade fails the ``c1 - c0 == 0`` assert while the value check
+    passes, one of those optimizer rules changed; values stay correct and
+    only the per-batch recompiles come back."""
     from pyspark.sql import functions as F
 
     from openalex_collaboration_crawler_spark.streaming.frontier import _ref_lit_int

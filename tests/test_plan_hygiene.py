@@ -117,3 +117,36 @@ def test_gate_catches_planted_unpartitioned_window(spark, sf_dir):
         "rk", F.row_number().over(Window.partitionBy("o_custkey").orderBy("o_orderkey"))
     )
     assert not _unpartitioned_windows(ok._jdf.queryExecution().executedPlan())
+
+
+PYTHON_NODES = ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython")
+
+
+def test_bloom_dedup_plans_stay_in_the_jvm(spark, tmp_path):
+    """The crawl's Bloom probe (inside ``mark_new_against_seen``, both
+    survivor-join strategies) and the Bloom merge are plain Spark SQL:
+    no operator of either executed plan hands rows to a Python worker."""
+    from pyspark.sql import functions as F
+
+    from openalex_collaboration_crawler_spark.streaming.seen import (
+        BLOOM_SCHEMA,
+        build_bloom_table,
+        mark_new_against_seen,
+    )
+
+    seen = spark.range(0, 500).select((F.col("id") * 7919).alias("url_hash"))
+    bloom_path = str(tmp_path / "bloom")
+    build_bloom_table(seen, n_parts=4).write.parquet(bloom_path)
+    bloom = spark.read.schema(BLOOM_SCHEMA).parquet(bloom_path)
+    cand = spark.range(0, 1000).select(
+        (F.col("id") * 7919).alias("url_hash"), F.col("id").alias("payload")
+    )
+    plans = {
+        join: mark_new_against_seen(cand, seen, bloom, n_parts=4, survivor_join=join)
+        for join in ("broadcast", "shuffle")
+    }
+    plans["merge"] = build_bloom_table(cand.select("url_hash"), n_parts=4, prev=bloom)
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in PYTHON_NODES:
+            assert node not in plan, f"{name}: {node} in the executed plan"

@@ -1,9 +1,11 @@
 """Seen-set properties: bloom no-false-negatives + FP bound; cuckoo
-insert/probe/delete; Spark-side build/probe/dedup round trip."""
+insert/probe/delete; the JVM Bloom table bit-for-bit against the numpy
+reference; Spark-side build/probe/dedup round trip."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from openalex_collaboration_crawler_spark.streaming.seen import (
@@ -12,7 +14,10 @@ from openalex_collaboration_crawler_spark.streaming.seen import (
     bloom_probe_blob,
     build_bloom_table,
     build_cuckoo_table,
+    check_bloom_params,
     dedup_against_seen,
+    fixed_bloom_build_blob,
+    mark_new_against_seen,
 )
 
 RNG = np.random.default_rng(42)
@@ -59,15 +64,78 @@ def test_cuckoo_serialization_roundtrip():
     assert cf2.contains_many(items).all()
 
 
+def _words_by_part(table) -> dict[int, np.ndarray]:
+    return {r["part"]: np.array(r["words"], dtype=np.int64) for r in table.collect()}
+
+
+def _reference_words(hashes: np.ndarray, n_parts: int, m_bits: int, k: int) -> dict:
+    """Per part: the numpy blob's bit bytes read as little-endian int64 words."""
+    out = {}
+    for part in range(n_parts):
+        mine = hashes[np.mod(hashes, n_parts) == part]
+        blob = fixed_bloom_build_blob(mine.view(np.uint64), m_bits, k)
+        out[part] = np.frombuffer(blob[16:], dtype="<i8")
+    return out
+
+
+@pytest.mark.parametrize("m_bits,k", [(1 << 12, 5), (64, 3)])
+def test_jvm_bloom_words_match_numpy_reference(spark, m_bits, k):
+    """Fresh build and build + delta: every part's JVM words equal the
+    bytes of ``fixed_bloom_build_blob`` over that part's hashes, and every
+    member probes as maybe-seen (no false negatives). Hashes span the full
+    signed int64 range, so the unsigned shift and the sign bit matter."""
+    n_parts = 4
+    rng = np.random.default_rng(7)
+    first = rng.integers(-(2**63), 2**63 - 1, size=600, dtype=np.int64)
+    delta = rng.integers(-(2**63), 2**63 - 1, size=300, dtype=np.int64)
+
+    def frame(h):
+        return spark.createDataFrame([(int(x),) for x in h], "url_hash bigint")
+
+    built = build_bloom_table(frame(first), n_parts=n_parts, m_bits=m_bits, k=k)
+    got = _words_by_part(built)
+    want = _reference_words(first, n_parts, m_bits, k)
+    assert sorted(got) == list(range(n_parts))
+    for part in range(n_parts):
+        assert np.array_equal(got[part], want[part]), part
+
+    merged = build_bloom_table(frame(delta), n_parts=n_parts, m_bits=m_bits, k=k, prev=built)
+    got = _words_by_part(merged)
+    want = _reference_words(np.concatenate([first, delta]), n_parts, m_bits, k)
+    for part in range(n_parts):
+        assert np.array_equal(got[part], want[part]), part
+
+    members = frame(np.concatenate([first, delta]))
+    flagged = mark_new_against_seen(
+        members, members, merged, n_parts=n_parts, m_bits=m_bits, k=k
+    )
+    assert flagged.where(F.col("is_new")).count() == 0
+
+
 def test_spark_bloom_dedup_exact(spark):
     seen = spark.range(0, 1000).select((F.col("id") * 7919).alias("url_hash"))
     cand = spark.range(0, 2000).select(
         (F.col("id") * 7919).alias("url_hash"), F.col("id").alias("payload")
     )
-    bloom = build_bloom_table(seen, n_parts=4)
-    got = dedup_against_seen(cand, seen, bloom, n_parts=4)
+    # a small filter, so false positives reach the exact check too
+    bloom = build_bloom_table(seen, n_parts=4, m_bits=1 << 10, k=3)
+    got = dedup_against_seen(cand, seen, bloom, n_parts=4, m_bits=1 << 10, k=3)
     ids = sorted(r["payload"] for r in got.collect())
     assert ids == list(range(1000, 2000))  # exactly the unseen half
+
+
+@pytest.mark.parametrize("m_bits,k", [(0, 5), (32, 5), (1000, 5), (3 << 10, 5), (1 << 10, 0)])
+def test_crawl_engine_rejects_bad_bloom_params(m_bits, k):
+    """The JVM bit positions are exact only for a power-of-two m_bits of
+    at least one 64-bit word, and k must name at least one position."""
+    from openalex_collaboration_crawler_spark.streaming.frontier import CrawlEngine
+
+    with pytest.raises(ValueError, match="bloom"):
+        CrawlEngine(
+            spark=None, state_dir="unused", pages_path="unused", politeness=None,
+            bloom_m_bits=m_bits, bloom_k=k,
+        )
+    check_bloom_params(64, 1)  # the smallest valid filter passes
 
 
 def test_spark_cuckoo_table_builds(spark):

@@ -117,7 +117,9 @@ def keep_papers(
     §3.3). Exactly equivalent under w.id uniqueness — every row of a
     ``__wid`` group carries the identical ``raw``, so ``first`` is
     value-deterministic, and uniqueness is already load-bearing for
-    this operator's one-row-per-kept-work contract (see above)."""
+    this operator's one-row-per-kept-work contract (see above). Works
+    without an id are dropped: grouped, they would form one null group
+    and emit one arbitrary ``raw``."""
     au = candidates.select(
         F.col("w.id").alias("__wid"), "raw", F.explode("w.authorships").alias("a")
     )
@@ -134,6 +136,7 @@ def keep_papers(
             F.lower(F.coalesce(F.col("a.author.display_name"), F.lit(""))).alias("name"),
         )
         .join(F.broadcast(keep_names.select(F.lower("name").alias("name"))), "name", "left_semi")
+        .where(F.col("__wid").isNotNull())
         .groupBy("__wid")
         .agg(F.first("raw").alias("raw"))
         .select("raw")

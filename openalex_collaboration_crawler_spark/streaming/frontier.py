@@ -29,7 +29,6 @@ state_dir/
                        and (parts, m_bits, k) -- any other recorded
                        format is rebuilt from the seen union
   results/batch={k}/  (seq, url, ..., text, lang, n_links, batch_id)
-  metrics/batch={k}/  per-partition lineage + fetch/dedup/parse counters
   _commits/{N}.json   atomic commit marker (written last)
 
 Each micro-batch:
@@ -41,13 +40,16 @@ Each micro-batch:
  3. decode+parse: one Arrow-batched ``mapInPandas`` does gzip decode
     + JSON parse + text/link extraction (reference decompress.cpp:
     39-52, openalex_json.cpp) — no per-row Python UDFs.
- 4. discover: explode links → canonicalize → hash → dedup against the
-    seen set: Bloom prefilter kills the already-seen mass; survivors
-    are confirmed with broadcast semi/anti joins that only SCAN the
-    seen union (zero shuffle of the big table).
- 5. commit: pending v+1, seen delta, bloom v+1, results, per-partition
-    metrics; then the commit marker. Resume = read the highest
-    committed version — a killed run replays from the last marker.
+ 4. discover: explode links → raw-string dedup → canonicalize → hash →
+    dedup against the seen set (streaming/seen.py). Below
+    ``bloom_min_seen`` seen rows that is one exact left join. Above it
+    a Bloom prefilter kills the already-seen mass, and the survivors
+    are confirmed with broadcast joins that only SCAN the seen union
+    (zero shuffle of the big table), or with co-partitioned shuffle
+    joins when the survivor bound exceeds the broadcast limits.
+ 5. commit: pending v+1, seen delta, bloom v+1, results; then the
+    commit marker. Resume = read the highest committed version — a
+    killed run replays from the last marker.
 
 Crawl ordering is a pure function of the committed data
 (depth, -priority, url_hash), so any cluster size produces the same
@@ -108,6 +110,10 @@ RESULTS_SCHEMA = (
     "text string, lang string, links array<string>, n_links int, "
     "parse_ok boolean, text_match boolean, batch_id int"
 )
+
+# rows per task for the loop's batch-sized widths (see CrawlEngine._width):
+# keeps per-task overhead amortized over at least this many pages
+BATCH_ROWS_PER_TASK = 8192
 
 
 def _ref_lit_int(v: int):
@@ -220,7 +226,6 @@ class CrawlEngine:
     bloom_parts: int = 16
     bloom_m_bits: int = 1 << 20
     bloom_k: int = 5
-    use_bloom: bool = True
     # below this seen-set size the Bloom machinery costs more in job
     # launches than it saves in shuffle — use one exact join instead.
     # At 10^10 the threshold is crossed in the first batches and the
@@ -275,51 +280,6 @@ class CrawlEngine:
     # uncommitted add/compaction is overwritten on replay.
     pending_compact_every: int = 8
     pending_delta_max_dels: int = 4_000_000
-    # pipeline the previous batch's seen/bloom state writes (and its
-    # commit marker) into the NEXT batch's select+parse window: those
-    # writes are only read again by the next batch's DEDUP phase, so
-    # deferring them hides their wall (plus one commit round) behind
-    # the decode. Crash-safe: the commit marker is written only after
-    # the deferred writes land, so a crash mid-overlap replays the
-    # whole batch onto the same versioned paths (idempotent overwrite,
-    # deterministic content — the existing kill/resume model).
-    overlap_state_writes: bool = True
-    # AQE partition coalescing targets bytes-per-partition and emits
-    # awkward task counts (e.g. 19 tasks on 16 cores → a second wave
-    # 19% full): measured avg busy cores matched ntasks/2 exactly on
-    # the big crawl stages. The crawl's per-batch jobs keep the pinned
-    # spark.sql.shuffle.partitions width (a multiple of the executor
-    # count → full waves); AQE's join re-planning stays ON.
-    disable_partition_coalescing: bool = True
-    # Disable AQE entirely inside the crawl loop (restored on exit).
-    # AQE materializes every exchange as its own job with a driver
-    # re-plan between stages; the crawl's per-batch stages are
-    # sub-second at bench scale, so those serial driver gaps dominate
-    # the per-batch floor — measured r5 (local[16], 6 batches,
-    # identical box window): jobs 102 → 46, zero-task driver wall
-    # 83.6 s → 35.2 s, crawl wall −14%. The loop loses nothing AQE
-    # provides: partition counts are pinned (coalescing was already
-    # off), join strategies are chosen explicitly from provable
-    # bounds (survivor_broadcast_limit / batch-hash broadcast), and
-    # hot-host skew is handled by explicit salting
-    # (politeness.select_batch). On a real cluster whose crawl
-    # stages run minutes, re-enabling AQE is one constructor flag.
-    disable_adaptive: bool = True
-    # raw-string dedup BEFORE canonicalization (an extra groupBy
-    # shuffle on the raw URL) pays off when the canonicalizer is
-    # expensive relative to shuffling one batch's raw links; with the
-    # r4 lambda-bound canonicalizer (~1.2 µs/URL) the trade is close —
-    # False canonicalizes every raw occurrence (array_distinct still
-    # collapses within-page repeats) and goes straight to ONE
-    # canonical-level groupBy: one shuffle fewer per batch. Both paths
-    # are exactly equivalent (min(depth) is associative); parity is
-    # pinned by tests/test_crawl_parity.py.
-    raw_prededup: bool = True
-    # decode/parse width for SMALL batches (the single-partition-rank
-    # path): width = clamp(est_rows / batch_rows_per_task, 1, cores).
-    # Keeps per-task overhead amortized over at least this many pages;
-    # the big-batch path is unaffected (already parallel).
-    batch_rows_per_task: int = 8192
     _pages_prepared: DataFrame | None = field(default=None, repr=False)
     _min_cap: int | None = field(default=None, repr=False)
     _overlap: dict | None = field(default=None, repr=False)
@@ -332,43 +292,38 @@ class CrawlEngine:
     def _bloom_format(self) -> dict:
         return bloom_format(self.bloom_parts, self.bloom_m_bits, self.bloom_k)
 
-    _COALESCE_KEY = "spark.sql.adaptive.coalescePartitions.enabled"
     _ADAPTIVE_KEY = "spark.sql.adaptive.enabled"
     _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
-    def _tune_shuffle_width(self, est: int | None) -> None:
-        """Scale-adaptive shuffle width for the loop's per-batch jobs
-        (guide §2: size partitions to the data, not the core count —
-        AQE coalescing would do this, but AQE is off in the loop).
-        The committed pending counter bounds every per-batch shuffle
-        (links explode re-aggregates to ≤ discovered ≈ O(pending)),
-        so width = clamp(est / batch_rows_per_task, 4, parallelism):
-        a bench-scale batch shuffles in a handful of tasks (and writes
-        that many state files) instead of a fixed 32, while big crawls
-        keep full width. Partitioning never affects results (ranks and
-        aggregates are pure functions of row values — the r5 parity
-        suite runs at several widths)."""
-        if est is None or os.environ.get("SPARK_GRAFT_CRAWL_WIDTH", "1") == "0":
-            return
+    def _width(self, est: int, floor: int) -> int:
+        """Batch-sized task count: clamp(est / BATCH_ROWS_PER_TASK,
+        floor, parallelism) (guide §2: size partitions to the data, not
+        the core count). A bench-scale batch runs in a handful of tasks
+        (and writes that many state files) while big crawls keep full
+        width. Partitioning never affects results (ranks and aggregates
+        are pure functions of row values — the parity suite runs at
+        several widths)."""
         par = self.spark.sparkContext.defaultParallelism
-        width = min(par, max(4, est // self.batch_rows_per_task))
-        self.spark.conf.set(self._SHUFFLE_KEY, str(width))
+        return min(par, max(floor, est // BATCH_ROWS_PER_TASK))
 
     def _enter_crawl_conf(self) -> None:
+        """AQE is off inside the crawl loop (restored on exit): it runs
+        every exchange as its own job with a driver re-plan between
+        stages, and the loop's per-batch stages are sub-second at bench
+        scale, so those serial gaps dominate the per-batch floor —
+        measured r5 (local[16], 6 batches): jobs 102 → 46, crawl wall
+        −14 %. The loop uses nothing AQE provides: partition counts are
+        pinned per batch (_width), join strategies are chosen from
+        provable bounds (survivor_broadcast_limit, the batch-hash
+        broadcast) and hot hosts are salted (politeness.select_batch)."""
         if self._saved_conf is not None:
             return
-        want = {}
-        if self.disable_adaptive:
-            want[self._ADAPTIVE_KEY] = "false"
-        elif self.disable_partition_coalescing:
-            want[self._COALESCE_KEY] = "false"
-        saved = {}
-        for k, v in want.items():
-            saved[k] = self.spark.conf.get(k, "true")
-            self.spark.conf.set(k, v)
-        # _tune_shuffle_width adjusts this per batch; restore on exit
-        saved[self._SHUFFLE_KEY] = self.spark.conf.get(self._SHUFFLE_KEY)
-        self._saved_conf = saved
+        self._saved_conf = {
+            self._ADAPTIVE_KEY: self.spark.conf.get(self._ADAPTIVE_KEY, "true"),
+            # the shuffle width is set per batch from _width
+            self._SHUFFLE_KEY: self.spark.conf.get(self._SHUFFLE_KEY),
+        }
+        self.spark.conf.set(self._ADAPTIVE_KEY, "false")
 
     def _exit_crawl_conf(self) -> None:
         """Restore the session's AQE confs — called from run()'s end
@@ -637,12 +592,13 @@ class CrawlEngine:
     # with a different version is stale and forces a rebuild
     _PREP_VERSION = 3  # v3: ~128 MB-target file sizing on the prepared table
 
-    def _pages_fingerprint(self) -> dict:
+    def _pages_fingerprint(self) -> tuple[dict, int]:
         """Content fingerprint of the source page table: data-file
         names + sizes + count (the same identity Iceberg snapshots
         carry as manifests). Regenerating the parquet in place changes
         file names/sizes, so a stale prepared table is detected and
-        rebuilt instead of silently reused."""
+        rebuilt instead of silently reused. Also returns the files'
+        total byte size."""
         files = []
         for root, _, names in os.walk(self.pages_path):
             for n in sorted(names):
@@ -654,7 +610,8 @@ class CrawlEngine:
         import hashlib
 
         h = hashlib.md5(json.dumps(files).encode()).hexdigest()
-        return {"version": self._PREP_VERSION, "n_files": len(files), "files_md5": h}
+        fp = {"version": self._PREP_VERSION, "n_files": len(files), "files_md5": h}
+        return fp, sum(size for _, size in files)
 
     def _pages(self) -> DataFrame:
         """The 'network': canonical_url → one deterministic snapshot.
@@ -685,7 +642,7 @@ class CrawlEngine:
         # derived purely from the input table → lives NEXT TO it and is
         # reused across runs/engines (like a one-time table-format
         # conversion, not crawl work)
-        fp = self._pages_fingerprint()
+        fp, src_bytes = self._pages_fingerprint()
         base = self.pages_path.rstrip("/") + "_prepared"
         path = f"{base}-{fp['files_md5'][:16]}"
         marker = os.path.join(path, "_prep_marker.json")
@@ -732,12 +689,6 @@ class CrawlEngine:
             # files from the source's known byte size (the fingerprint
             # already carries it); parallelism of the scan at real scale
             # comes from maxPartitionBytes splits, not file count.
-            src_bytes = sum(
-                os.path.getsize(os.path.join(r, n))
-                for r, _, ns in os.walk(self.pages_path)
-                for n in ns
-                if not n.startswith(("_", "."))
-            )
             n_files = min(
                 self.spark.sparkContext.defaultParallelism,
                 max(1, src_bytes // (128 << 20) + 1),
@@ -792,18 +743,8 @@ class CrawlEngine:
         writes and the commit marker land before the call returns.
         ``defer_state=True`` (what ``run()`` passes): the seen/bloom
         writes + commit are deferred into the NEXT batch's parse
-        window (``overlap_state_writes``); the caller owns flushing
-        via another run_batch / run() end / accessors / close()."""
-        import time as _time
-
-        _debug = os.environ.get("SPARK_GRAFT_CRAWL_DEBUG") == "1"
-        _t0 = _time.time()
-        _marks: list[tuple[str, float]] = []
-
-        def _mark(label: str) -> None:
-            if _debug:
-                _marks.append((label, _time.time()))
-
+        window; the caller owns flushing via another run_batch /
+        run() end / accessors / close()."""
         self._enter_crawl_conf()
         if self._overlap is not None:
             # previous batch's seen/bloom writes are still in flight —
@@ -843,7 +784,11 @@ class CrawlEngine:
         #    fan-out (concurrent jobs racing on an unmaterialized cache
         #    re-execute the subtree below the cache point — ~3× waste).
         est = int(pending_prev) if pending_prev is not None else None
-        self._tune_shuffle_width(est)
+        if est is not None:
+            # the committed pending counter bounds every per-batch
+            # shuffle (links explode re-aggregates to ≤ discovered ≈
+            # O(pending)); AQE coalescing would size it, but AQE is off
+            self.spark.conf.set(self._SHUFFLE_KEY, str(self._width(est, 4)))
         batch = select_batch(
             pending,
             self.politeness,
@@ -853,11 +798,7 @@ class CrawlEngine:
             est_rows=est,
             skip_caps=est is not None and self._politeness_min_cap() >= est,
         ).select("seq", "url", "url_hash", "host", "depth", "priority")
-        if (
-            est is not None
-            and est <= SMALL_BATCH_ROWS
-            and os.environ.get("SPARK_GRAFT_BATCH_REPART", "1") != "0"
-        ):
+        if est is not None and est <= SMALL_BATCH_ROWS:
             # The small-batch rank is a single-partition window; left
             # alone, EVERYTHING downstream of it stays one partition —
             # fetch join, gzip decode, parse, the results file, and the
@@ -874,14 +815,10 @@ class CrawlEngine:
             # ordering semantics are untouched; the big-batch path
             # keeps its parallelism from add_global_seq's group
             # windows and never takes this exchange.
-            width = min(
-                self.spark.sparkContext.defaultParallelism,
-                max(1, est // self.batch_rows_per_task),
-            )
+            width = self._width(est, 1)
             if width > 1:
                 batch = batch.repartition(width, "url_hash")
         batch = batch.persist()
-        _mark("select_build")
 
         # fetch + decode + parse. The batch's url-hash SET is broadcast
         # (8 bytes/URL) into a semi-join that prefilters the corpus
@@ -929,30 +866,13 @@ class CrawlEngine:
         )
         results_path = os.path.join(self.state_dir, "results", f"batch={batch_id}")
 
-        def timed(fn):
-            if not _debug:
-                return fn
-
-            def wrapper():
-                t = _time.time()
-                out = fn()
-                print(f"  [batch {batch_id}] {fn.__name__}: {_time.time() - t:.2f}s", flush=True)
-                return out
-
-            return wrapper
-
         # ---- phase 1: decode once, straight into the results sink
-        def j_parse_write():
-            results.write.mode("overwrite").parquet(results_path)
-
-        _mark("parse_build")
-        timed(j_parse_write)()
-        _mark("parse_job")
+        results.write.mode("overwrite").parquet(results_path)
         m_parse = obs.get
         # the previous batch's deferred seen/bloom writes ran BEHIND the
         # parse job above; the dedup phase below reads them — flush now
         # (completes the writes, lands the commit marker)
-        timed(self._flush_overlap)()
+        self._flush_overlap()
         n_fetched = int(m_parse["fetched"])
         parsed_ok = int(m_parse["parsed_ok"] or 0)
         text_match = int(m_parse["text_match"] or 0)
@@ -970,23 +890,18 @@ class CrawlEngine:
         # but not PENDING (they can never be fetched) — observably
         # identical to filtering at select time, and it keeps the
         # pending_rows counter exact.
-        # RAW-string dedup BEFORE canonicalization (raw_prededup=True):
-        # outlinks repeat heavily within a batch (popular pages are
-        # linked from many fetched pages), so collapsing duplicates
-        # first (string-equality hash-agg with map-side combine) cuts
-        # the regex work by the batch's link-duplication factor — at
-        # the cost of a second shuffle on the raw strings. With
-        # raw_prededup=False the canonicalizer runs on every raw
-        # occurrence and the dedup is ONE canonical-level groupBy.
-        # min(depth) is associative, so both orders are exactly
-        # equivalent (parity: tests/test_crawl_parity.py).
-        exploded = res.select(
-            F.explode("links").alias("raw_url"), F.col("depth").alias("pdepth")
-        )
-        if self.raw_prededup:
-            exploded = exploded.groupBy("raw_url").agg(F.min("pdepth").alias("pdepth"))
+        # RAW-string dedup BEFORE canonicalization: outlinks repeat
+        # heavily within a batch (popular pages are linked from many
+        # fetched pages), so collapsing duplicates first (string-equality
+        # hash-agg with map-side combine) cuts the regex work by the
+        # batch's link-duplication factor, at the cost of a second
+        # shuffle on the raw strings. min(depth) is associative, so the
+        # result equals one canonical-level groupBy.
         discovered = (
-            exploded.select(
+            res.select(F.explode("links").alias("raw_url"), F.col("depth").alias("pdepth"))
+            .groupBy("raw_url")
+            .agg(F.min("pdepth").alias("pdepth"))
+            .select(
                 canonicalize_url("raw_url").alias("url"),
                 (F.col("pdepth") + 1).cast("int").alias("depth"),
             )
@@ -1009,7 +924,8 @@ class CrawlEngine:
         seen_union = self._load_seen_union(v, seen_base)
         do_compact = (batch_id - seen_base) >= self.compact_every
         seen_rows = int(prev.get("seen_rows", 0))
-        bloom_mode = self.use_bloom and seen_rows >= self.bloom_min_seen
+        bloom_mode = seen_rows >= self.bloom_min_seen
+        bloom, survivor_join = None, "broadcast"
         if bloom_mode:
             bloom = self._ensure_bloom(v, seen_union, prev.get("bloom_format")).cache()
             # survivor-set size this batch is provably ≤ links_total —
@@ -1032,33 +948,23 @@ class CrawlEngine:
                 or (est_distinct is not None and est_distinct > self.survivor_distinct_limit)
                 else "broadcast"
             )
-            marked = mark_new_against_seen(
-                discovered,
-                seen_union,
-                bloom,
-                n_parts=self.bloom_parts,
-                m_bits=self.bloom_m_bits,
-                k=self.bloom_k,
-                survivor_join=survivor_join,
-            ).persist()
-        else:
-            # small seen set: ONE co-partitioned join beats the Bloom
-            # machinery's extra broadcast and merge jobs
-            bloom = None
-            marked = (
-                discovered.join(
-                    seen_union.withColumn("__m", F.lit(1)), "url_hash", "left"
-                )
-                .withColumn("is_new", F.col("__m").isNull())
-                .drop("__m")
-            ).persist()
+        # bloom None (small seen set): one exact co-partitioned join
+        marked = mark_new_against_seen(
+            discovered,
+            seen_union,
+            bloom,
+            n_parts=self.bloom_parts,
+            m_bits=self.bloom_m_bits,
+            k=self.bloom_k,
+            survivor_join=survivor_join,
+        ).persist()
         # dedup metrics ride the FIRST job that materializes `marked`
         # (the pending write) as an Observation — the collect round-trip
         # this replaces was part of the measured per-batch serial floor.
         # The CollectMetrics node sits between the cache and the filters,
         # so every marked row flows through it exactly once per job; the
-        # first completed job (j_pending, which phase 2 runs alone
-        # alongside the independent metrics write) supplies the values.
+        # first completed job (the pending write, which phase 2 runs
+        # alone) supplies the values.
         obs_dedup = Observation()
         marked_obs = marked.observe(
             obs_dedup,
@@ -1075,7 +981,8 @@ class CrawlEngine:
             _ref_lit_int(batch_id).cast("int").alias("batch_enqueued"),
         ]
         # j_seen/j_bloom read plain `marked` (no CollectMetrics in their
-        # plans), so the observation fires exactly once — in j_pending.
+        # plans), so the observation fires exactly once — in the
+        # pending write.
         new_urls = marked.where("is_new").select(*enqueue_cols)
         new_pending = marked_obs.where(F.col("is_new") & ~F.col("__blocked")).select(
             *enqueue_cols
@@ -1097,16 +1004,10 @@ class CrawlEngine:
             next_pending = pending.join(
                 batch.select("url_hash"), "url_hash", "left_anti"
             ).unionByName(new_pending)
+            pending_path = self._path("pending", f"v{batch_id}")
         else:
             next_pending = new_pending
-
-        def j_pending():
-            path = (
-                self._path("pending", f"v{batch_id}")
-                if compact_pending
-                else self._path("pending_add", f"b{batch_id}")
-            )
-            next_pending.write.mode("overwrite").parquet(path)
+            pending_path = self._path("pending_add", f"b{batch_id}")
 
         def j_seen():
             delta = new_urls.select("url_hash")
@@ -1134,9 +1035,7 @@ class CrawlEngine:
         # hit a materialized cache instead of racing to re-execute the
         # dedup subtree (~3× waste, measured). Per-partition lineage is
         # merge-on-read (metrics_table), not a per-batch write.
-        _mark("dedup_build")
-        timed(j_pending)()
-        _mark("pending_job")
+        next_pending.write.mode("overwrite").parquet(pending_path)
         m_dedup = obs_dedup.get
         n_discovered = int(m_dedup["nd"])
         n_new = int(m_dedup["nn"] or 0)
@@ -1165,13 +1064,11 @@ class CrawlEngine:
         batch.unpersist()
         # ---- phase 3: seen/bloom state writes. The loop itself never
         # reads them again this batch (they feed the NEXT batch's
-        # dedup phase), so by default they are deferred into the next
-        # batch's select+parse window (overlap_state_writes); the
-        # final batch (and overlap-off mode) completes them
-        # synchronously, and every accessor flushes first.
-        futures = [
-            self._ensure_pool().submit(timed(j)) for j in (j_seen, j_bloom)
-        ]
+        # dedup phase), so with defer_state they run in the next
+        # batch's select+parse window; without it (and on the final
+        # batch) they complete synchronously, and every accessor
+        # flushes first.
+        futures = [self._ensure_pool().submit(j) for j in (j_seen, j_bloom)]
         release = [marked] + ([bloom] if bloom is not None else [])
         self._overlap = {
             "batch_id": batch_id,
@@ -1181,20 +1078,8 @@ class CrawlEngine:
         }
         # run_batch() alone is durable-on-return (kill/resume contract);
         # only run()'s managed loop opts into cross-batch deferral
-        if not (self.overlap_state_writes and defer_state) or metrics["done"]:
+        if not defer_state or metrics["done"]:
             self._flush_overlap()
-        if _debug:
-            _mark("tail")
-            spans = []
-            prev_t = _t0
-            for label, t in _marks:
-                spans.append(f"{label}={t - prev_t:.2f}")
-                prev_t = t
-            print(
-                f"[batch {batch_id}] fetched={n_fetched} wall={_time.time() - _t0:.1f}s "
-                + " ".join(spans),
-                flush=True,
-            )
         return metrics
 
     def _partition_metrics(self, parsed: DataFrame) -> DataFrame:
@@ -1230,7 +1115,7 @@ class CrawlEngine:
                     break
         finally:
             # a failed batch must not leave deferred writes dangling or
-            # the session's coalescing conf flipped for other queries
+            # the session's AQE conf flipped for other queries
             try:
                 self._flush_overlap()  # max_batches may stop mid-overlap
             finally:

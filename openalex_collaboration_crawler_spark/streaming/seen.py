@@ -5,10 +5,10 @@ The reference's seen-set analogues are driver-local dicts/sets
 generation/src/openalex_json.cpp:128-134 AffMap distinct-insert).
 At 10^10 URLs neither fits one machine, so:
 
-- **Exactness** comes from a plain ``left_anti`` join of candidate
-  url_hashes against the seen table — distributed, spill-safe,
-  co-partitioned on ``pmod(url_hash, P)``.
-- **Efficiency** comes from a *partitioned Bloom prefilter*: one
+- **Exactness** comes from a join of candidate url_hashes against the
+  seen table (``mark_new_against_seen``) — distributed, spill-safe.
+  While the seen set is small that is the whole dedup: one left join.
+- **Efficiency** at scale comes from a *partitioned Bloom prefilter*: one
   ``array<bigint>`` of ``m_bits / 64`` words per hash partition, built,
   OR-merged and probed in plain Spark SQL (explode → ``bit_or`` per word
   → ordered ``collect_list``; probe = k codegen'd ``element_at`` bit
@@ -214,17 +214,22 @@ def _bloom_flag(
 def mark_new_against_seen(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom_table: DataFrame,
+    bloom_table: DataFrame | None = None,
     hash_col: str = "url_hash",
     n_parts: int = 32,
     m_bits: int = 1 << 20,
     k: int = 5,
     survivor_join: str = "broadcast",
 ) -> DataFrame:
-    """Candidates + exact ``is_new`` flag. Bloom probe first; only the
+    """Candidates + exact ``is_new`` flag.
+
+    Without a ``bloom_table`` this is ONE co-partitioned left join
+    against the seen table: while the seen set is small (the crawl's
+    ``bloom_min_seen``) it beats the Bloom machinery's extra broadcast
+    and merge jobs. With one, the Bloom probe runs first and only the
     maybe-seen *survivors* are exact-checked against the seen table.
 
-    survivor_join:
+    survivor_join (Bloom path only):
       - ``"broadcast"``: survivors broadcast into a semi-join that only
         SCANS seen, the small matched set broadcast back — zero shuffle
         of the seen table. Right when survivors are small (typical
@@ -242,6 +247,12 @@ def mark_new_against_seen(
 
     Callers should ``.cache()`` the result before taking multiple
     actions on it (the probe + scans re-execute otherwise)."""
+    if bloom_table is None:
+        return (
+            candidates.join(seen.select(hash_col).withColumn("__m", F.lit(1)), hash_col, "left")
+            .withColumn("is_new", F.col("__m").isNull())
+            .drop("__m")
+        )
     check_bloom_params(m_bits, k)
     flagged = _bloom_flag(candidates, bloom_table, hash_col, n_parts, m_bits, k)
     survivors = flagged.where(F.col("maybe_seen")).select(hash_col)
@@ -383,31 +394,3 @@ def build_cuckoo_table(
         F.col(hash_col).alias("h"), F.pmod(F.col(hash_col), F.lit(n_parts)).alias("part")
     )
     return keyed.groupBy("part").applyInPandas(build, schema="part int, blob binary")
-
-
-# ---------------------------------------------------------- exact dedup
-
-
-def dedup_against_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom_table: DataFrame | None = None,
-    hash_col: str = "url_hash",
-    n_parts: int = 32,
-    m_bits: int = 1 << 20,
-    k: int = 5,
-) -> DataFrame:
-    """Exactly-new candidates: Bloom prefilter (optional) then an
-    exact check on the seen table. The prefilter's definitely-new
-    rows bypass the exact check entirely.
-
-    The exact check avoids shuffling the (huge) seen table: survivors
-    are broadcast into a semi-join that *streams* seen (scan only),
-    and the small matched set is broadcast back for the final
-    anti-join. Net shuffle volume: zero; seen is only ever scanned."""
-    if bloom_table is None:
-        return candidates.join(seen.select(hash_col), hash_col, "left_anti")
-    marked = mark_new_against_seen(
-        candidates, seen, bloom_table, hash_col, n_parts, m_bits, k
-    )
-    return marked.where(F.col("is_new")).drop("is_new")

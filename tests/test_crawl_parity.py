@@ -162,11 +162,13 @@ def test_resume_equals_uninterrupted(spark, world, engine_run, oracle_run):
 
 
 def test_bloom_off_same_result(spark, world, oracle_run):
-    """The Bloom prefilter is a pure optimization — disabling it must
-    not change any observable output."""
-    eng = _mk_engine(spark, world, "engine_nobloom", use_bloom=False)
+    """The Bloom prefilter is a pure optimization — a bloom_min_seen no
+    seen set reaches keeps every batch on the exact join, and must not
+    change any observable output."""
+    eng = _mk_engine(spark, world, "engine_nobloom", bloom_min_seen=1 << 62)
     eng.init_from_seeds(world["seeds"])
-    eng.run(max_batches=50)
+    metrics = eng.run(max_batches=50)
+    assert not any(m.get("bloom_mode") for m in metrics)
     assert eng.crawl_order() == oracle_run.order
     assert eng.seen_hashes() == oracle_run.seen
 
@@ -365,12 +367,18 @@ def test_pending_delta_never_compacts_same_result(spark, world, oracle_run):
 
 
 def test_overlap_off_same_result(spark, world, oracle_run):
-    """Deferred state writes (overlap_state_writes, run()'s pipelined
-    mode) are a pure latency optimization — outputs, commits, and the
-    final store must be identical to the synchronous mode."""
-    eng = _mk_engine(spark, world, "engine_no_overlap", overlap_state_writes=False)
+    """Deferred state writes (run()'s defer_state=True) are a pure
+    latency optimization — a crawl driven by bare run_batch() calls,
+    each durable on return, must give identical outputs."""
+    eng = _mk_engine(spark, world, "engine_no_overlap")
     eng.init_from_seeds(world["seeds"])
-    eng.run(max_batches=50)
+    for _ in range(50):
+        m = eng.run_batch()
+        assert eng._overlap is None  # nothing deferred past the call
+        if m.get("done") or not m.get("fetched"):
+            break
+    assert m.get("done")
+    eng.close()
     assert eng.crawl_order() == oracle_run.order
     assert eng.seen_hashes() == oracle_run.seen
 
@@ -390,17 +398,6 @@ def test_overlap_interrupted_run_resumes(spark, world, oracle_run):
     assert eng2.seen_hashes() == oracle_run.seen
 
 
-def test_no_raw_prededup_same_result(spark, world, oracle_run):
-    """raw_prededup=False (canonicalize every raw occurrence, single
-    canonical-level groupBy — one shuffle fewer per batch) is a pure
-    plan change: crawl order and seen set must be identical."""
-    eng = _mk_engine(spark, world, "engine_noprededup", raw_prededup=False)
-    eng.init_from_seeds(world["seeds"])
-    eng.run(max_batches=50)
-    assert eng.crawl_order() == oracle_run.order
-    assert eng.seen_hashes() == oracle_run.seen
-
-
 def test_salted_caps_path_same_result(spark, world, oracle_run, monkeypatch):
     """Force the two-phase SALTED politeness capping (the hot-host
     skew path; engages automatically above SMALL_BATCH_ROWS) through
@@ -413,6 +410,30 @@ def test_salted_caps_path_same_result(spark, world, oracle_run, monkeypatch):
     eng.run(max_batches=50)
     assert eng.crawl_order() == oracle_run.order
     assert eng.seen_hashes() == oracle_run.seen
+
+
+def test_crawl_restores_session_conf(spark, world):
+    """The loop turns AQE off and sizes the shuffle width per batch;
+    both confs return to their pre-crawl values after run(), and after
+    bare run_batch() calls once close() is called."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    # a width no batch-sized choice picks, so a missed restore shows
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        before = {k: spark.conf.get(k) for k in keys}
+        eng = _mk_engine(spark, world, "engine_conf")
+        eng.init_from_seeds(world["seeds"])
+        eng.run(max_batches=2)
+        assert {k: spark.conf.get(k) for k in keys} == before
+        eng.run_batch()
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert spark.conf.get("spark.sql.shuffle.partitions") != "7"
+        eng.close()
+        assert {k: spark.conf.get(k) for k in keys} == before
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_metrics_table_merge_on_read(spark, world, engine_run):

@@ -210,6 +210,27 @@ def test_papers_pipeline_filters_and_passthrough(spark):
     assert s == {("Networks", 2020): 1, ("Networks", 2021): 2}
 
 
+def test_keep_papers_drops_idless_works(spark):
+    """Works without ``id`` whose IT author is on the keep list are not
+    kept: a null work id is no group, so no arbitrary ``raw`` of theirs
+    may reach the output."""
+    idless = [
+        json.dumps(
+            {
+                "publication_year": 2020,
+                "concepts": [{"id": CONCEPT, "score": 0.9}],
+                "authorships": [_auth("Ada Lovelace")],
+                "topics": TOPIC,
+                "title": title,
+            }
+        )
+        for title in ("no id one", "no id two")
+    ]
+    raw = raw_from_lines(spark, [WORK_LINES[0], *idless])
+    kept, _, _ = papers_pipeline(raw, _keep(spark), "IT", CONCEPT)
+    assert [r["raw"] for r in kept.collect()] == [WORK_LINES[0]]
+
+
 def test_confidence_boundary_is_reject_on_equal(spark):
     """P5 rejects score <= conf (not <) — boundary must drop."""
     raw = raw_from_lines(spark, [WORK_LINES[1]])

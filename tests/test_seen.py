@@ -15,7 +15,6 @@ from openalex_collaboration_crawler_spark.streaming.seen import (
     build_bloom_table,
     build_cuckoo_table,
     check_bloom_params,
-    dedup_against_seen,
     fixed_bloom_build_blob,
     mark_new_against_seen,
 )
@@ -112,14 +111,20 @@ def test_jvm_bloom_words_match_numpy_reference(spark, m_bits, k):
     assert flagged.where(F.col("is_new")).count() == 0
 
 
-def test_spark_bloom_dedup_exact(spark):
+@pytest.mark.parametrize("with_bloom", [True, False], ids=["bloom", "exact"])
+def test_spark_bloom_dedup_exact(spark, with_bloom):
+    """Both dedup strategies flag exactly the unseen candidates: the
+    Bloom probe plus survivor check, and the plain exact join."""
     seen = spark.range(0, 1000).select((F.col("id") * 7919).alias("url_hash"))
     cand = spark.range(0, 2000).select(
         (F.col("id") * 7919).alias("url_hash"), F.col("id").alias("payload")
     )
     # a small filter, so false positives reach the exact check too
-    bloom = build_bloom_table(seen, n_parts=4, m_bits=1 << 10, k=3)
-    got = dedup_against_seen(cand, seen, bloom, n_parts=4, m_bits=1 << 10, k=3)
+    bloom = build_bloom_table(seen, n_parts=4, m_bits=1 << 10, k=3) if with_bloom else None
+    got = mark_new_against_seen(cand, seen, bloom, n_parts=4, m_bits=1 << 10, k=3).where(
+        "is_new"
+    )
+    assert got.columns == ["url_hash", "payload", "is_new"]
     ids = sorted(r["payload"] for r in got.collect())
     assert ids == list(range(1000, 2000))  # exactly the unseen half
 

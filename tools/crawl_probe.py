@@ -1,4 +1,4 @@
-"""Crawl-only scaling probe with per-job debug timings.
+"""Crawl-only scaling probe.
 
 Same crawl configuration as tools/scaling_job.py (the measured
 surface), minus the queries phase — for fast iteration on the
@@ -8,7 +8,8 @@ per-batch serial floor. Usage:
         tools/crawl_probe.py N <pages_path> <state_dir>
 
 Env: SPARK_GRAFT_BENCH_PAGES, SPARK_GRAFT_SCALE_SEEDS as in
-scaling_job; SPARK_GRAFT_CRAWL_DEBUG=1 prints per-job walls.
+scaling_job. For per-phase timings run
+``python3 perfbench/run.py --workload crawl_bulk --trace 1``.
 """
 
 from __future__ import annotations
@@ -71,12 +72,6 @@ def main() -> None:
         robots=None,
         default_per_host=(1 << 31) - 1,
         bloom_parts=16,
-        # A/B knob: SPARK_GRAFT_RAW_PREDEDUP=0 canonicalizes every raw
-        # occurrence and skips the raw-level dedup shuffle
-        raw_prededup=os.environ.get("SPARK_GRAFT_RAW_PREDEDUP", "1") != "0",
-        # A/B knob: SPARK_GRAFT_CRAWL_AQE=1 leaves AQE on inside the
-        # crawl loop (engine default is off — see frontier.py)
-        disable_adaptive=os.environ.get("SPARK_GRAFT_CRAWL_AQE", "0") != "1",
     )
     eng.init_from_seeds(build_seeds(spark, n_pages=n_pages, n_seeds=n_seeds))
     t0 = time.time()

@@ -73,13 +73,3 @@ def perm_hash_sql(base_expr: str, p: int) -> str:
     return (
         f"(({a} * ({base_expr} >> 30) + {b} * ({base_expr} & {_MASK30}) + {c}) % {_PERM_P})"
     )
-
-
-def fast_hash64(col: Column | str, seed: int = 42) -> Column:
-    """Engine-internal hash (xxhash64): cheapest JVM-side 64-bit hash.
-
-    Used for partitioning/salting/seen-set keys where oracle
-    portability is not required.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c, F.lit(seed))

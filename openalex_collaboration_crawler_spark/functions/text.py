@@ -137,10 +137,6 @@ def lang_scores_from_words(w: Column) -> dict[str, Column]:
     return out
 
 
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    return lang_scores_from_words(words(col))
-
-
 def lang_id(col: Column | str, min_hits: int = 1) -> Column:
     """Argmax marker-word language, ties broken by language code asc;
     below ``min_hits`` → 'und'.

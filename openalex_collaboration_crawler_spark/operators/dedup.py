@@ -15,30 +15,17 @@ on the group key, never a driver-side set.
 Scale notes:
 - exact: one hash-agg shuffle on a 128-bit fingerprint; map-side
   combine collapses intra-partition dups before the wire.
-- minhash LSH: explode(shingles) is the big intermediate — it is
-  immediately re-aggregated per (doc, perm) so Tungsten's partial
-  agg keeps the shuffle at |docs|×|perms| rows, independent of doc
-  length. Band buckets then self-join; bucket sizes are the skew
-  risk (boilerplate/empty docs) → drop buckets over a cap, exactly
-  like production LSH pipelines.
-- simhash: one groupBy(doc) with 2×bits conditional sums — no
-  row blowup at all.
-- pairwise verify joins emit (a,b) with a<b only, halving traffic.
-
-Block lifetime & fault tolerance: the candidate-pair builders pin
-their shared frame with an EAGER ``localCheckpoint`` (a Spark job at
-plan-construction time). This is deliberate: the frame feeds both
-sides of a self-join, and without pinning each consumer re-executes
-the subtree (and a re-executed nondeterministic ordering could change
-bucket-cap survivors). The pinned blocks live in the block manager
-until the DataFrame is garbage-collected (ContextCleaner) — CALLERS
-OWN THAT LIFETIME: in a long-lived session, drop references (or call
-``spark.sparkContext._jsc.sc().cleaner()`` via gc) once consumed.
-``localCheckpoint`` data is not recomputable after executor loss; on
-a multi-executor cluster an executor failure aborts the operator and
-the caller re-runs it — acceptable for these second-scale jobs,
-whereas the crawl loop (streaming/frontier.py) owns its persistence
-explicitly and gc-collects per batch.
+- minhash LSH: signatures are row-side array reductions over each
+  doc's shingle hashes — no shuffle before the band buckets. Pairs
+  are generated per band bucket (operators/blocks.py); bucket sizes
+  are the skew risk (boilerplate/empty docs) → drop buckets over a
+  cap, exactly like production LSH pipelines.
+- simhash: per-bit sums are row-side array aggregates — no shuffle
+  and no row blowup at all.
+- every pair generator (minhash, n-gram, simhash) goes through
+  operators/blocks.block_pairs: one exchange per block key, pairs
+  emitted array-side with a<b only, no self-join and no eager
+  checkpoint (nothing runs until the caller's action).
 """
 
 from __future__ import annotations
@@ -58,6 +45,7 @@ from openalex_collaboration_crawler_spark.functions.text import (
     shingles,
     shingles_sql,
 )
+from openalex_collaboration_crawler_spark.operators.blocks import block_pairs, cap_blocks
 
 # ---------------------------------------------------------------- exact
 
@@ -163,37 +151,25 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All pairs (a<b) with shingle-Jaccard ≥ threshold.
 
-    Inverted-index join: pairs only materialize for docs sharing ≥1
-    shingle. At scale, hot shingles (boilerplate) are the skew hazard:
-    ONE shingle shared by 10^6 docs emits ~5·10^11 pairs. Shingles
-    appearing in more than ``max_doc_freq`` docs are therefore dropped
-    BEFORE the index join (one window over the shingle shuffle — no
-    extra join), and Jaccard is computed over the surviving shingle
-    space for both the intersection and the set sizes — a consistent,
+    Inverted index: pairs only materialize for docs sharing ≥1
+    shingle (:func:`~.blocks.block_pairs` over the shingle). At scale,
+    hot shingles (boilerplate) are the skew hazard: ONE shingle shared
+    by 10^6 docs emits ~5·10^11 pairs. Shingles appearing in more than
+    ``max_doc_freq`` docs are therefore dropped BEFORE any pair is
+    generated (one window over the shingle shuffle), and Jaccard is
+    computed over the surviving shingle space for both the
+    intersection and the set sizes — a consistent,
     documented approximation (boilerplate shingles carry no dedup
     signal), standard in production near-dup pipelines. The oracle
     mirrors the cap exactly.
     """
-    from pyspark.sql.window import Window
-
-    sh_all = doc_shingles(docs, text_col, id_col, n)
-    w_freq = Window.partitionBy("shingle")
-    # pinned: referenced by the size table and both inverted-index
-    # sides — one shingle pass instead of three
-    sh = (
-        sh_all.withColumn("__df", F.count("*").over(w_freq))
-        .where(F.col("__df") <= max_doc_freq)
-        .drop("__df")
-    ).localCheckpoint()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("id").alias("a"), "shingle")
-    b = sh.select(F.col("id").alias("b"), "shingle")
+    sh = doc_shingles(docs, text_col, id_col, n)
     inter = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
+        block_pairs(sh, ["shingle"], "id", max_block=max_doc_freq)
         .groupBy("a", "b")
         .agg(F.count("*").alias("inter"))
     )
+    sizes = cap_blocks(sh, ["shingle"], max_doc_freq).groupBy("id").agg(F.count("*").alias("sz"))
     sa = sizes.select(F.col("id").alias("a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("id").alias("b"), F.col("sz").alias("sz_b"))
     return (
@@ -326,40 +302,12 @@ def minhash_candidate_pairs(
     explosion guard — at 10^10 docs a single mega-bucket would emit
     O(n²) pairs and dominate the job).
 
-    Shape (r6): count buckets once, semi-join the survivors, then
-    collect each kept bucket's ids and generate its pairs ARRAY-SIDE
-    (same nested-Generate trick as pairwise_edges). The former
-    self-join form planned the `sizes` aggregation twice (one per join
-    side — Catalyst does not dedupe common subplans) and built three
-    broadcasts; this form aggregates once and joins once. Memory stays
-    provably bounded: collect_list runs AFTER the ≤ max_bucket
-    semi-join, so no list exceeds max_bucket ids — the count-first
-    design exists precisely so a 10^8-doc boilerplate bucket is
+    Pairs come from :func:`~.blocks.block_pairs` over (band, bucket):
+    buckets are counted before any list is collected, so no list
+    exceeds ``max_bucket`` ids and a 10^8-doc boilerplate bucket is
     dropped without ever being materialized."""
-    # pinned: the bucket table feeds the size guard and the pair join —
-    # unpinned, Catalyst re-expands the whole shingle+minhash pipeline
-    # per consumer
-    bk = minhash_band_buckets(minhash_signatures(docs, text_col, id_col, n)).localCheckpoint()
-    kept = (
-        bk.groupBy("band", "bucket")
-        .agg(F.count("*").alias("bsz"))
-        .where(F.col("bsz") <= max_bucket)
-        .select("band", "bucket")
-    )
-    grouped = (
-        bk.join(kept, ["band", "bucket"], "left_semi")
-        .groupBy("band", "bucket")
-        .agg(F.collect_list("id").alias("__ids"))
-    )
-    pairs = F.expr(
-        "flatten(transform(__ids, x -> "
-        "transform(filter(__ids, y -> x < y), y -> struct(x AS a, y AS b))))"
-    )
-    return (
-        grouped.select(F.explode(pairs).alias("__p"))
-        .select(F.col("__p.a").alias("a"), F.col("__p.b").alias("b"))
-        .distinct()
-    )
+    bk = minhash_band_buckets(minhash_signatures(docs, text_col, id_col, n))
+    return block_pairs(bk, ["band", "bucket"], "id", max_block=max_bucket).select("a", "b").distinct()
 
 
 def minhash_candidate_pairs_sql(
@@ -435,37 +383,31 @@ def simhash_neardup_pairs(
 ) -> DataFrame:
     """Pairs (a<b) with SimHash Hamming distance ≤ max_hamming.
 
-    Scale path: block on bit-chunks (pigeonhole — with 4 chunks, any
-    pair within Hamming 3 shares ≥1 exact chunk), then verify. Avoids
-    the all-pairs product entirely."""
-    # pinned: the 32-sum simhash agg feeds all 4 chunk blocks × both
-    # join sides — one signature pass instead of eight
-    sh = simhash(docs, text_col, id_col).localCheckpoint()
-    n_chunks = 4
-    bits_per = SIMHASH_BITS // n_chunks
-    # one explode instead of an n_chunks-way plan-level union (r6):
-    # the union form planned the (checkpointed, but still per-branch
-    # scanned) signature table once per chunk
+    Scale path: block on bit-chunks, then verify. Pigeonhole rule: the
+    32 bits are cut into ``max_hamming + 1`` contiguous ranges
+    (bounds ``32·c // (max_hamming + 1)``); a pair differing in at most
+    ``max_hamming`` bits leaves at least one range untouched, so it
+    shares that exact chunk and is found. At the default 3 these are
+    four 8-bit chunks. Blocks are uncapped (the oracle's contract is
+    exact), and the all-pairs product is never formed. Raises
+    ``ValueError`` unless ``0 <= max_hamming < 32``."""
+    if not 0 <= max_hamming < SIMHASH_BITS:
+        raise ValueError(f"max_hamming must be in [0, {SIMHASH_BITS}), got {max_hamming}")
+    n_chunks = max_hamming + 1
+    bounds = [SIMHASH_BITS * c // n_chunks for c in range(n_chunks + 1)]
+    # one explode instead of an n_chunks-way plan-level union (r6)
     chunk_entries = [
         F.struct(
             F.lit(c).alias("chunk"),
-            F.col("simhash")
-            .bitwiseAND(F.lit(((1 << bits_per) - 1) << (c * bits_per)))
-            .alias("chunk_val"),
+            F.col("simhash").bitwiseAND(F.lit(((1 << hi) - 1) ^ ((1 << lo) - 1))).alias("chunk_val"),
         )
-        for c in range(n_chunks)
+        for c, (lo, hi) in enumerate(zip(bounds, bounds[1:]))
     ]
-    blocks = sh.select(
+    blocks = simhash(docs, text_col, id_col).select(
         "id", "simhash", F.explode(F.array(*chunk_entries)).alias("__c")
-    ).select(
-        "id", "simhash", F.col("__c.chunk").alias("chunk"), F.col("__c.chunk_val").alias("chunk_val")
-    )
-    a = blocks.select(F.col("id").alias("a"), F.col("simhash").alias("ha"), "chunk", "chunk_val")
-    b = blocks.select(F.col("id").alias("b"), F.col("simhash").alias("hb"), "chunk", "chunk_val")
-    cand = (
-        a.join(b, ["chunk", "chunk_val"]).where(F.col("a") < F.col("b")).select("a", "b", "ha", "hb").distinct()
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    ).select("id", "simhash", "__c.chunk", "__c.chunk_val")
+    cand = block_pairs(blocks, ["chunk", "chunk_val"], "id", payload=["simhash"]).distinct()
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.withColumn("hamming", ham.cast("int")).where(
         F.col("hamming") <= max_hamming
     ).select("a", "b", "hamming")

@@ -18,12 +18,15 @@ All deterministic; CC has a DuckDB recursive-CTE oracle in
 __spark_entry__.
 
 Block lifetime & fault tolerance: several operators pin shared
-subframes with eager ``localCheckpoint`` (see dedup.py's module note
-for the full contract). Short version: pinning is what keeps the
-multi-consumer plans from re-expanding (structural_stats measured
->1000 exchanges unpinned) and keeps iterative CC's lineage O(1);
-callers own block lifetime (blocks free when the DataFrame is
-GC'd), and executor loss aborts the operator — re-run it.
+subframes with an EAGER ``localCheckpoint`` (a Spark job at plan-
+construction time). Pinning is what keeps the multi-consumer plans
+from re-expanding (structural_stats measured >1000 exchanges
+unpinned) and keeps iterative CC's lineage O(1). The pinned blocks
+live in the block manager until the DataFrame is garbage-collected
+(ContextCleaner), so callers own that lifetime: in a long-lived
+session, drop references once consumed. Pinned data is not
+recomputable after executor loss; an executor failure aborts the
+operator and the caller re-runs it.
 """
 
 from __future__ import annotations

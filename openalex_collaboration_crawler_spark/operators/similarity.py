@@ -33,6 +33,7 @@ from openalex_collaboration_crawler_spark.functions.vectors import (
     lsh_bucket,
     lsh_bucket_sql,
 )
+from openalex_collaboration_crawler_spark.operators.blocks import block_pairs, cap_blocks
 
 
 def brute_force_topk(
@@ -111,19 +112,6 @@ def with_lsh_bucket(
     return df.withColumn("bucket", lsh_bucket(F.col(vec_col), n_planes, dim, seed))
 
 
-def _cap_buckets(df: DataFrame, max_bucket: int) -> DataFrame:
-    """Drop rows of buckets holding more than ``max_bucket`` rows (one
-    window over the bucket shuffle — the same mega-bucket guard as
-    minhash LSH; a skewed bucket at corpus scale would make the
-    within-bucket join O(n²))."""
-    w = Window.partitionBy("bucket")
-    return (
-        df.withColumn("__bsz", F.count("*").over(w))
-        .where(F.col("__bsz") <= max_bucket)
-        .drop("__bsz")
-    )
-
-
 def _cap_buckets_sql(inner_sql: str, max_bucket: int) -> str:
     return f"""
 SELECT * EXCLUDE (__bsz) FROM (
@@ -165,7 +153,7 @@ def lsh_topk(
     Corpus buckets above ``max_bucket`` are dropped (mega-bucket
     guard); pick ``n_planes`` via :func:`n_planes_for` so expected
     buckets stay far below the cap."""
-    c = _cap_buckets(with_lsh_bucket(corpus, vec_col, n_planes, dim), max_bucket)
+    c = cap_blocks(with_lsh_bucket(corpus, vec_col, n_planes, dim), ["bucket"], max_bucket)
     q = with_lsh_bucket(queries, "query_vec", n_planes, dim)
     joined = c.join(F.broadcast(q), "bucket").select(
         F.col("query_id"),
@@ -552,15 +540,13 @@ def embedding_neardup_pairs(
     dim: int = 64,
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
-    """Pairs (a<b) in the same LSH bucket with cosine ≥ threshold.
-    Buckets above ``max_bucket`` are dropped (mega-bucket guard)."""
-    e = _cap_buckets(with_lsh_bucket(embeddings, vec_col, n_planes, dim), max_bucket)
-    a = e.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), "bucket")
-    b = e.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), "bucket")
+    """Pairs (a<b) in the same LSH bucket with cosine ≥ threshold, from
+    :func:`~.blocks.block_pairs` over the bucket. Buckets above
+    ``max_bucket`` are dropped (mega-bucket guard)."""
+    e = with_lsh_bucket(embeddings, vec_col, n_planes, dim)
     return (
-        a.join(b, "bucket")
-        .where(F.col("a") < F.col("b"))
-        .withColumn("sim_raw", cosine(F.col("va"), F.col("vb")))
+        block_pairs(e, ["bucket"], id_col, payload=[vec_col], max_block=max_bucket)
+        .withColumn("sim_raw", cosine(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")))
         .where(F.col("sim_raw") >= threshold)
         .select("a", "b", F.round("sim_raw", 6).alias("sim"))
     )

@@ -46,8 +46,3 @@ def join_kinds(df: DataFrame) -> list[str]:
         if marker in plan:
             kinds.append(marker)
     return kinds
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = formatted_plan(df)
-    return plan.count("WholeStageCodegen")

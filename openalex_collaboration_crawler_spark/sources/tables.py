@@ -42,10 +42,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def collab_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic (work_id, author, year) authorship table derived
     from the TPC-H-ish tables, used to exercise the reference's

@@ -2,11 +2,11 @@
 
 The reference is pure batch (SURVEY §2.7); the engine adds the
 streaming surface a crawl/analytics pipeline needs: windowed
-aggregation with watermarked late-data handling, and gap
-sessionization. Each has a batch twin in operators/analytics.py so
-the streaming output is differential-testable against the oracle'd
-batch result (run the stream over the same parquet with
-``Trigger.AvailableNow``-style processAllAvailable, compare tables).
+aggregation with watermarked late-data handling. It has a batch twin
+in operators/analytics.py so the streaming output is differential-
+testable against the oracle'd batch result (run the stream over the
+same parquet with ``Trigger.AvailableNow``-style
+processAllAvailable, compare tables).
 """
 
 from __future__ import annotations
@@ -58,22 +58,6 @@ def windowed_counts_batch(events: DataFrame, window: str = "1 hour") -> DataFram
             "event_type",
             "n",
             "total_value",
-        )
-    )
-
-
-def session_windows(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Native session windows (gap-based) in streaming mode — the
-    streaming twin of operators/analytics.sessionize."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("t_start"),
-            F.col("w.end").alias("t_end"),
-            "n_events",
         )
     )
 

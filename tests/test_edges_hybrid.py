@@ -48,8 +48,9 @@ def test_hybrid_cap_invariance(spark):
 def test_year_functional_dependency_collapses_to_min(spark):
     """pairwise_edges groups by work_id ALONE and carries min(year)
     (r4: reuses upstream hash(work_id) partitioning — same-session
-    warm medians at sf0.1, tools/ab_pairwise.py, 5 reps: r2 self-join
-    1.139s, r3 (work_id,year) hybrid 0.911s, r4 work_id-only hybrid
+    warm medians at sf0.1, 5 reps, from the r4 one-off A/B script,
+    since retired (see CHANGES.md): r2 self-join 1.139s, r3
+    (work_id,year) hybrid 0.911s, r4 work_id-only hybrid
     0.797s, sorted-prefix generator 1.008s; all-variant output hashes
     identical on 1,205,033 rows). A work violating the documented one-year-per-work
     dependency collapses to ONE author list at min(year) instead of

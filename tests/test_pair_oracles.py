@@ -1,0 +1,42 @@
+"""Differential check of the blocking-pair queries against their DuckDB
+oracles at sf0.001, through the same comparison as
+tools/check_correctness.py (row count, columns, dtypes, values)."""
+
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+import duckdb
+import pytest
+
+import __spark_entry__ as entrymod
+from openalex_collaboration_crawler_spark.sources.tables import TABLES
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+from check_correctness import compare  # noqa: E402
+
+PAIR_QUERIES = (
+    "minhash_candidates",
+    "ngram_jaccard",
+    "simhash_neardup",
+    "embedding_neardup",
+    "ann_lsh_topk",
+)
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", PAIR_QUERIES)
+def test_pair_query_matches_oracle(spark, sf_dir, duck, name):
+    got = entrymod.queries()[name](spark, sf_dir).toPandas()
+    want = duck.sql(entrymod.oracle_sql()[name]).df()
+    assert len(want) > 0, f"{name}: empty oracle result proves nothing"
+    assert compare(name, got, want) == []

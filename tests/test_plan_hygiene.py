@@ -26,6 +26,8 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
+from openalex_collaboration_crawler_spark.operators import dedup as DD
+from openalex_collaboration_crawler_spark.operators import similarity as SIM
 
 CARTESIAN_OK = {
     "null_model_stats",
@@ -150,3 +152,34 @@ def test_bloom_dedup_plans_stay_in_the_jvm(spark, tmp_path):
         plan = df._jdf.queryExecution().executedPlan().toString()
         for node in PYTHON_NODES:
             assert node not in plan, f"{name}: {node} in the executed plan"
+
+
+PAIR_OPERATORS = {
+    "minhash_candidate_pairs": ("documents", DD.minhash_candidate_pairs),
+    "ngram_jaccard_pairs": ("documents", DD.ngram_jaccard_pairs),
+    "simhash_neardup_pairs": ("documents", DD.simhash_neardup_pairs),
+    "embedding_neardup_pairs": ("embeddings", SIM.embedding_neardup_pairs),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PAIR_OPERATORS))
+def test_pair_operators_launch_no_jobs_and_pin_nothing(spark, sf_dir, name):
+    """Building a near-duplicate pair operator is lazy: no Spark job runs
+    before the caller's action (an eager ``localCheckpoint`` would be
+    one), and the executed plan reads no pinned ``ExistingRDD``, whose
+    blocks cannot be recomputed after an executor is lost."""
+    from openalex_collaboration_crawler_spark.sources.tables import load_table
+
+    table, op = PAIR_OPERATORS[name]
+    src = load_table(spark, sf_dir, table)  # its schema-inference job is not counted
+    sc = spark.sparkContext
+    group = f"plan-hygiene-{name}"
+    sc.setJobGroup(group, f"build {name}")
+    try:
+        df = op(src)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], f"{name}: {len(jobs)} job(s) launched while building the plan"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, f"{name}: pinned RDD scan in the executed plan"

@@ -42,10 +42,11 @@ from openalex_collaboration_crawler_spark.sources.tables import (
 
 
 def _pairwise(spark: "SparkSession", sf_dir: str) -> "DataFrame":
-    """Shared pairwise-edge builder for every edge-chain query (r6):
-    the fused grouped source (one exchange, see collab_grouped) feeding
-    the single-pipeline pair Generate (see pairwise_edges_grouped).
-    Identical output multiset to ED.pairwise_edges(collab_model(...))."""
+    """Shared pairwise-edge builder for every edge-chain query: the
+    fused grouped source (one exchange, see collab_grouped) feeding
+    pairwise_edges_grouped, whose pairs come from the sorted-list
+    emitter in operators/blocks.py. Identical output multiset to
+    ED.pairwise_edges(collab_model(...))."""
     return ED.pairwise_edges_grouped(collab_grouped(spark, sf_dir))
 from openalex_collaboration_crawler_spark.streaming.politeness import select_batch
 

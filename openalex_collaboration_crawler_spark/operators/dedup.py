@@ -69,13 +69,6 @@ GROUP BY fp HAVING count(*) >= 2
 """
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per fingerprint."""
-    w = docs.select(F.col("*"), fingerprint(text_col).alias("__fp"))
-    keep = w.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-    return w.join(keep, ["__fp", id_col], "left_semi").drop("__fp")
-
-
 # ------------------------------------------------------- shingle tables
 
 

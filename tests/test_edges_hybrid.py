@@ -1,13 +1,14 @@
-"""pairwise_edges hybrid path: array pair-gen vs join fallback parity."""
+"""pairwise_edges: output multiset equals the SQL oracle's pair rule,
+and the one-year-per-work dependency."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from collections import Counter
 
 from openalex_collaboration_crawler_spark.operators.edges import pairwise_edges
 
 
-def _authorships(spark):
+def _authorship_rows():
     rows = []
     # works with 1..8 authors, plus one "mega" work with 20 authors,
     # plus duplicate authorship rows (multiplicity semantics)
@@ -17,32 +18,43 @@ def _authorships(spark):
         for a in range(k):
             rows.append((w, 100 + a, 1990 + w))
     rows.append((2, 100, 1992))  # duplicate authorship in work 2
-    return spark.createDataFrame(rows, "work_id long, author long, year long")
+    rows += [(6, 300, 1996), (6, 300, 1996)]  # one author, listed twice
+    return rows
 
 
-def test_hybrid_cap_invariance(spark):
-    """Output multiset must be identical whatever the cap routes
-    through the array path vs the join fallback."""
-    au = _authorships(spark)
+def _oracle_pairs(rows):
+    """PAIRWISE_EDGES_SQL_TEMPLATE in plain Python: a self-join on
+    work_id with a.author < b.author, plus an (a, a) row for each work
+    with exactly one authorship row."""
+    by_work: dict[tuple[int, int], list[int]] = {}
+    for w, a, y in rows:
+        by_work.setdefault((w, y), []).append(a)
+    ms: Counter = Counter()
+    for (w, y), authors in by_work.items():
+        for a in authors:
+            for b in authors:
+                if a < b:
+                    ms[(y, w, a, b)] += 1
+        if len(authors) == 1:
+            ms[(y, w, authors[0], authors[0])] += 1
+    return ms
 
-    def multiset(cap):
-        out = pairwise_edges(au, small_work_cap=cap).collect()
-        ms = {}
-        for r in out:
-            key = (r["year"], r["work_id"], r["a1"], r["a2"])
-            ms[key] = ms.get(key, 0) + 1
-        return ms
 
-    all_array = multiset(cap=1000)   # everything on the array path
-    all_join = multiset(cap=0)       # everything on the join fallback
-    mixed = multiset(cap=8)          # split routing
-    assert all_array == all_join == mixed
+def test_pairwise_edges_matches_self_join_reference(spark):
+    rows = _authorship_rows()
+    au = spark.createDataFrame(rows, "work_id long, author long, year long")
+    got = Counter(
+        (r["year"], r["work_id"], r["a1"], r["a2"]) for r in pairwise_edges(au).collect()
+    )
+    assert got == _oracle_pairs(rows)
 
     # semantics spot-checks: solo self-loop, strict a1<a2, duplicate
-    # authorship multiplies pairs
-    assert (1991, 1, 100, 100) in all_array            # solo work
-    assert all(a1 <= a2 for (_, _, a1, a2) in all_array)
-    assert all_array[(1992, 2, 100, 101)] == 2         # dup author ×2
+    # authorship multiplies pairs, a repeated lone author pairs with
+    # nobody and gets no self-loop
+    assert got[(1991, 1, 100, 100)] == 1  # solo work
+    assert all(a1 < a2 for (_, w, a1, a2) in got if w != 1)
+    assert got[(1992, 2, 100, 101)] == 2  # dup author ×2
+    assert not any(w == 6 for (_, w, _, _) in got)
 
 
 def test_year_functional_dependency_collapses_to_min(spark):

@@ -9,6 +9,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from openalex_collaboration_crawler_spark.operators.edges import pairwise_edges
 from openalex_collaboration_crawler_spark.streaming.seen import (
     CuckooFilter,
     bloom_build_blob,
@@ -63,17 +64,14 @@ def test_cuckoo_membership_and_delete(items):
     assert cf.table.sum() == 0
 
 
-@given(st.integers(min_value=1, max_value=12))
-@settings(max_examples=12, deadline=None)
-def test_pair_count_formula(n):
-    """|pairwise_edges(work with n authors)| == C(n,2) + [n == 1]."""
-    expected = n * (n - 1) // 2 + (1 if n == 1 else 0)
-    # pure-python mirror of the operator's semantics
-    authors = [f"A{i}" for i in range(n)]
-    pairs = [(a, b) for i, a in enumerate(authors) for b in authors[i + 1 :]]
-    if n == 1:
-        pairs.append((authors[0], authors[0]))
-    assert len(pairs) == expected
+def test_pair_count_formula(spark):
+    """|pairwise_edges(work with n authors)| == C(n,2) + [n == 1],
+    for n = 1..12 in one job."""
+    rows = [(n, f"A{i}", 2000) for n in range(1, 13) for i in range(n)]
+    au = spark.createDataFrame(rows, "work_id long, author string, year long")
+    counts = pairwise_edges(au).groupBy("work_id").count().collect()
+    got = {r["work_id"]: r["count"] for r in counts}
+    assert got == {n: n * (n - 1) // 2 + (n == 1) for n in range(1, 13)}
 
 
 @given(st.text(max_size=50))

@@ -13,9 +13,8 @@ Spark engine:
 - ``operators`` — the reference's dataflow operators (SURVEY.md §2)
   plus large-scale training-data ops (dedup, similarity search,
   text analysis, multimodal plumbing).
-- ``plans``     — plan-inspection helpers (pushdown/broadcast asserts).
-- ``streaming`` — URL frontier, seen-set, politeness scheduler,
-  checkpoint/resume crawl loop, and event-stream operators.
+- ``streaming`` — URL frontier, seen-set, politeness scheduler and the
+  checkpoint/resume crawl loop.
 
 Everything is DataFrame/SQL + Arrow-vectorized UDFs; no per-row Python
 in any hot path, no RDDs, no custom Catalyst rules.

@@ -1,2 +1,1 @@
-"""Crawl-loop machinery (frontier, seen-set, politeness) and
-event-stream operators."""
+"""Crawl-loop machinery: frontier, seen-set, politeness."""

@@ -19,10 +19,11 @@ At 10^10 URLs neither fits one machine, so:
   for *survivors*; false negatives cannot occur. The numpy
   ``fixed_bloom_build_blob`` is the reference the tests compare the JVM
   words against bit for bit.
-- **Deletions** (recrawl policies) break Blooms, so a partition-local
-  **cuckoo filter** (vectorized numpy, 4-slot buckets, 16-bit
-  fingerprints) is provided as the fallback with the same
-  build/probe API plus ``delete``.
+- **Deletions** (recrawl policies) break Blooms; the fallback is a
+  partition-local **cuckoo filter** (numpy, 4-slot buckets, 16-bit
+  fingerprints, the Bloom's build/probe API plus ``delete``). No crawl
+  path deletes from the seen set yet, so only test_seen and
+  test_properties reach ``CuckooFilter`` and ``build_cuckoo_table``.
 
 Partitioning: filter rows are keyed by ``part = pmod(url_hash,
 n_parts)`` and candidates join them on the same key. Spark broadcasts

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, not whichever copy another path provides
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from openalex_collaboration_crawler_spark.session import get_spark  # noqa: E402
 

@@ -1,4 +1,5 @@
-"""Multimodal plumbing, plan-inspection asserts, streaming twins."""
+"""Multimodal plumbing: media metadata, features, resize, frame sampling
+and codec detection."""
 
 from __future__ import annotations
 
@@ -10,17 +11,6 @@ from openalex_collaboration_crawler_spark.operators.multimodal import (
     extract_features,
     media_metadata,
     real_image_decode,
-)
-from openalex_collaboration_crawler_spark.plans.explain import (
-    has_pushed_filter,
-    join_kinds,
-    scan_read_schema,
-)
-from openalex_collaboration_crawler_spark.streaming.events import (
-    read_events_stream,
-    run_stream_to_table,
-    windowed_counts,
-    windowed_counts_batch,
 )
 
 
@@ -159,45 +149,3 @@ def test_frame_sampling_plumbing(spark):
     for r in frames:
         per.setdefault(r["media_id"], []).append((r["frame_idx"], r["ts_ms"]))
     assert all(sorted(v) == [(0, 0), (1, 500), (2, 1000), (3, 1500)] for v in per.values())
-
-
-def test_filter_pushdown_and_pruning(spark, sf_dir):
-    df = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .where(F.col("l_orderkey") == 42)
-        .select("l_orderkey", "l_quantity")
-    )
-    assert has_pushed_filter(df, "l_orderkey")
-    cols = scan_read_schema(df)
-    assert set(cols) == {"l_orderkey", "l_quantity"}  # pruning reached the scan
-
-
-def test_broadcast_join_choice(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    small = li.join(F.broadcast(nation), li.l_suppkey == nation.n_nationkey)
-    assert "BroadcastHashJoin" in join_kinds(small)
-
-
-def test_streaming_windowed_counts_match_batch(spark, sf_dir, tmp_path):
-    import shutil
-
-    # streaming file source needs a directory
-    stream_dir = str(tmp_path / "events_stream")
-    import os
-
-    os.makedirs(stream_dir, exist_ok=True)
-    shutil.copy(f"{sf_dir}/events.parquet", f"{stream_dir}/part-0.parquet")
-    events_path = f"{sf_dir}/events.parquet"
-    stream = read_events_stream(spark, stream_dir)
-    run_stream_to_table(windowed_counts(stream), "stream_out")
-    got = {
-        (r["w_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in spark.sql("SELECT * FROM stream_out").collect()
-    }
-    batch = windowed_counts_batch(spark.read.parquet(events_path))
-    want = {
-        (r["w_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in batch.collect()
-    }
-    assert got == want

@@ -1,8 +1,7 @@
 """Round-2 operators: topic normalization (P11), structural stats
 (A8), null-model ensemble (A13), community works/topics (J2/J3),
-community labelling (script 10), plus the skew/scale guards added
-this round (hot-shingle cap, LSH bucket cap, skew_join how
-restriction, CC non-convergence detection)."""
+community labelling (script 10), plus the scale guards added this
+round (hot-shingle cap, LSH bucket cap, CC non-convergence detection)."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ from openalex_collaboration_crawler_spark.operators import dedup as DD
 from openalex_collaboration_crawler_spark.operators import graphstats as GS
 from openalex_collaboration_crawler_spark.operators import similarity as SIM
 from openalex_collaboration_crawler_spark.operators import topics as TP
-from openalex_collaboration_crawler_spark.operators.skew import skew_join
 
 
 # ------------------------------------------------------- P11 topics
@@ -210,13 +208,6 @@ def test_lsh_bucket_cap_drops_mega_bucket(spark):
     assert all(r["a"] >= 100 and r["b"] >= 100 for r in capped.collect())
     uncapped = SIM.embedding_neardup_pairs(emb, threshold=0.99, dim=16, max_bucket=10**9)
     assert uncapped.count() >= 50 * 49 / 2  # the blowup the cap prevents
-
-
-def test_skew_join_rejects_outer(spark):
-    df = spark.createDataFrame([(1, "x")], "k long, v string")
-    with pytest.raises(ValueError, match="right/full outer"):
-        skew_join(df, df, "k", how="full_outer")
-    assert skew_join(df, df.select("k"), "k", how="left_semi").count() == 1
 
 
 def test_connected_components_raises_on_nonconvergence(spark):

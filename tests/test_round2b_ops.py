@@ -1,10 +1,9 @@
-"""Round-2b: large-star/small-star CC, IVF ANN, stateful streaming."""
+"""Round-2b: large-star/small-star CC, IVF ANN."""
 
 from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from openalex_collaboration_crawler_spark.operators import graphstats as GS
@@ -53,56 +52,3 @@ def test_ivf_topk_deterministic_and_bounded(spark):
     # probing ALL cells must recover the exact self-match at rank 1
     full = SIM.ivf_topk(corpus, queries, k=1, n_centroids=8, n_probe=8).collect()
     assert all(r["vec_id"] == r["query_id"] and r["sim"] == 1.0 for r in full)
-
-
-def test_streaming_first_seen_emits_once(spark, sf_dir, tmp_path):
-    """Drive the applyInPandasWithState dedup over a multi-trigger file
-    stream: every key emitted exactly once, covering all keys."""
-    from openalex_collaboration_crawler_spark.streaming.events import EVENTS_SCHEMA
-    from openalex_collaboration_crawler_spark.streaming.stateful import streaming_first_seen
-
-    src = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # several files → several micro-batches with repeating keys
-    src.repartition(6).write.mode("overwrite").parquet(str(tmp_path / "ev"))
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "ev"))
-    )
-    out = streaming_first_seen(stream, "user_id", "ts")
-    q = out.writeStream.outputMode("append").format("memory").queryName("fs_test").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT user_id FROM fs_test").collect()
-    keys = [r["user_id"] for r in got]
-    want = {r["user_id"] for r in src.select("user_id").distinct().collect()}
-    assert len(keys) == len(set(keys))  # exactly once per key
-    assert set(keys) == want  # every key covered
-
-
-def test_streaming_host_budget_running_total(spark, tmp_path):
-    from openalex_collaboration_crawler_spark.streaming.stateful import streaming_host_budget
-
-    rows = [(f"u{i}", "hostA" if i % 3 else "hostB") for i in range(60)]
-    df = spark.createDataFrame(rows, "url string, host string")
-    df.repartition(4).write.mode("overwrite").parquet(str(tmp_path / "f"))
-    stream = (
-        spark.readStream.schema("url string, host string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "f"))
-    )
-    out = streaming_host_budget(stream, "host", budget=30)
-    q = out.writeStream.outputMode("append").format("memory").queryName("hb_test").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rowsz = spark.sql("SELECT * FROM hb_test").collect()
-    final = {}
-    for r in rowsz:
-        final[r["host"]] = max(final.get(r["host"], 0), r["n_total"])
-    assert final["hostA"] == 40 and final["hostB"] == 20
-    assert any(r["over_budget"] for r in rowsz if r["host"] == "hostA")
-    assert not any(r["over_budget"] for r in rowsz if r["host"] == "hostB")

@@ -1,51 +1,7 @@
-"""Salting helpers are result-identical to unsalted forms."""
+"""Hot-host salting in the crawl's politeness capping is
+result-identical to the single per-host window."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from openalex_collaboration_crawler_spark.operators.skew import (
-    hot_keys,
-    salted_repartition,
-    skew_join,
-)
-
-
-def _skewed(spark, n=5000):
-    # 60% of rows share key 0
-    return spark.range(n).select(
-        F.when(F.col("id") % 10 < 6, 0).otherwise(F.col("id") % 50).alias("k"),
-        F.col("id").alias("v"),
-    )
-
-
-def test_skew_join_equals_plain_join(spark):
-    big = _skewed(spark)
-    small = spark.range(50).select(F.col("id").alias("k"), (F.col("id") * 2).alias("w"))
-    plain = big.join(small, "k").select("k", "v", "w")
-    salted = skew_join(big, small, "k", n_salts=8).select("k", "v", "w")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    big = _skewed(spark)
-    parts = (
-        salted_repartition(big, "k", n_salts=8, n_partitions=8)
-        .where(F.col("k") == 0)
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    assert parts >= 4  # hot key 0 spread across several partitions
-    # and row content is untouched
-    assert salted_repartition(big, "k", n_salts=8).count() == big.count()
-
-
-def test_hot_keys_diagnostic(spark):
-    top = hot_keys(_skewed(spark), "k", top_n=1).collect()[0]
-    assert top["k"] == 0 and top["share"] > 0.5
 
 
 def test_salted_host_cap_preserves_crawl_order(spark):

@@ -9,13 +9,16 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
+import tempfile
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from openalex_collaboration_crawler_spark.session import get_spark  # noqa: E402
@@ -71,13 +74,34 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
     return errs
 
 
+def oracle_connection(sf_dir: str, tmp: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB over ``sf_dir``'s tables, capped at half the physical RAM
+    (DuckDB's own default is 80 %) because Spark shares the machine, and
+    spilling under ``tmp`` up to a quarter of its free disk: an oracle
+    that outgrows both fails alone instead of starving the run."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(
+        config={
+            "memory_limit": f"{ram // 2 >> 20}MB",
+            "temp_directory": tmp,
+            "max_temp_directory_size": f"{shutil.disk_usage(tmp).free // 4 >> 20}MB",
+        }
+    )
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    with tempfile.TemporaryDirectory(prefix="check_correctness-") as tmp:
+        return check(sf_dir, only, tmp)
+
+
+def check(sf_dir: str, only: set[str], tmp: str) -> int:
     spark = get_spark()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir, tmp)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     n_fail = 0
@@ -107,6 +131,7 @@ def main() -> int:
             print(f"FAIL {name} ({t1 - t0:.1f}s): " + "; ".join(errs))
         else:
             print(f"OK   {name}: rows={len(sdf)} ({t1 - t0:.1f}s)")
+    con.close()
     spark.stop()
     return 1 if n_fail else 0
 

@@ -8,19 +8,16 @@ as a batch-iterated frontier over tables.
 State layout (Iceberg-shaped, parquet-backed in this sandbox):
 
 state_dir/
-  pending/v{B}/       (url, url_hash, host, depth, priority,
-                       batch_enqueued)  -- the live queue's BASE,
-                       rewritten only at compaction points (Iceberg
-                       merge-on-read analogue; see the
-                       pending_compact_every field)
-  pending_add/b{N}/   same schema -- APPEND-ONLY delta of the urls
-                       batch N discovered; the logical queue at v is
-                       base ∪ adds(B..v] minus everything fetched
-                       since B (the results parquet doubles as the
-                       equality-delete files -- no delete state)
-  seen/b{K}/          (url_hash)        -- APPEND-ONLY delta per batch;
-                       the full seen set is the union of deltas, so
-                       per-batch write cost is O(|delta|), not O(seen)
+  pending/b{N}/       (url, url_hash, host, depth, priority,
+                       batch_enqueued)  -- compacted log of the queue
+  seen/b{N}/          (url_hash)        -- compacted log of the seen set
+                       Both logs share one layout: at version v a log
+                       is b{base} ∪ … ∪ b{v}, where b{base} is a full
+                       copy (written every compact_every batches) and
+                       each later b{N} holds only what batch N added,
+                       so a batch writes O(new), not O(log). The queue
+                       also drops everything fetched in (base, v]: the
+                       results parquet doubles as its delete files.
   bloom/v{N}/         (part, words)     -- incremental fixed-size Bloom
                        filter per hash partition as an array<bigint> of
                        m_bits/64 words, OR-merged with each delta in
@@ -29,7 +26,8 @@ state_dir/
                        and (parts, m_bits, k) -- any other recorded
                        format is rebuilt from the seen union
   results/batch={k}/  (seq, url, ..., text, lang, n_links, batch_id)
-  _commits/{N}.json   atomic commit marker (written last)
+  _commits/{N}.json   atomic commit marker (written last); records
+                       each log's base and the STATE_FORMAT
 
 Each micro-batch:
  1. select fetch set: politeness-capped, robots-filtered,
@@ -47,7 +45,7 @@ Each micro-batch:
     are confirmed with broadcast joins that only SCAN the seen union
     (zero shuffle of the big table), or with co-partitioned shuffle
     joins when the survivor bound exceeds the broadcast limits.
- 5. commit: pending v+1, seen delta, bloom v+1, results; then the
+ 5. commit: pending and seen deltas, bloom v+1, results; then the
     commit marker. Resume = read the highest committed version — a
     killed run replays from the last marker.
 
@@ -99,6 +97,8 @@ PENDING_SCHEMA = (
     "url string, url_hash bigint, host string, depth int, priority int, batch_enqueued int"
 )
 SEEN_SCHEMA = "url_hash bigint"
+# every commit records it; run_batch refuses state of another layout
+STATE_FORMAT = "compacted-log-v1"
 
 PARSE_SCHEMA = (
     "seq long, url string, url_hash long, host string, depth int, "
@@ -250,35 +250,20 @@ class CrawlEngine:
     # the broadcast path, so the previous batch's measured duplication
     # factor (links_total/discovered, both already in the committed
     # metrics) scales links_total into an estimated distinct count,
-    # and THAT is capped here. Estimate missing (resume from an older
-    # state version) → only the provable links_total cap applies.
-    # Both triggers are OR-ed: the switch can only engage the shuffle
-    # path MORE often than the provable bound alone, never less.
+    # and THAT is capped here. The seed commit records no links, so
+    # batch 1 has no estimate and only the provable links_total cap
+    # applies. Both triggers are OR-ed: the switch can only engage the
+    # shuffle path MORE often than the provable bound alone, never less.
     survivor_distinct_limit: int = 2_000_000
-    # every K batches the seen delta is written as the COMPACTED full
-    # union (table maintenance): the union read stays O(K) directories
-    # instead of one per batch. Crash-safe: the compaction point is
-    # recorded in the commit marker (seen_base); an uncommitted
-    # compacted delta is simply overwritten on replay.
+    # Compaction of the pending and seen logs (Iceberg's
+    # rewrite_data_files): a batch writes a log's full copy as its new
+    # base once the chain since the base reaches compact_every batches,
+    # so reads stay O(compact_every) directories. Pending also
+    # compacts once the fetched urls its read must anti-join exceed
+    # pending_delta_max_dels, which keeps that join a broadcast.
+    # Crash-safe: the bases live in the commit marker, and an
+    # uncommitted delta or copy is overwritten on replay.
     compact_every: int = 8
-    # -------- log-structured pending (Iceberg merge-on-read analogue)
-    # A full pending rewrite per batch is O(frontier) I/O — at a
-    # 10^10-URL frontier that dwarfs the batch itself. Instead each
-    # batch appends only its NEW urls (pending_add/b{N}, the "data
-    # files") and the fetched set doubles as equality-delete files:
-    # the results parquet already persists the batch's url_hash
-    # column, so delta mode writes ZERO extra delete state. The read
-    # side is base ∪ adds(base..v] ANTI-JOIN fetched(base..v] — the
-    # delete set is bounded by pending_delta_max_dels (below), so the
-    # anti-join is always a broadcast (never a frontier shuffle).
-    # Compaction (the full rewrite, = the old behavior) folds the
-    # chain back into a new base when the delete set would exceed the
-    # broadcast bound or the chain exceeds pending_compact_every dirs
-    # — Iceberg's rewrite_data_files, driven by the same two
-    # pressures (delete-file volume, manifest fan-out). Crash-safe:
-    # pending_base/pending_dels live in the commit marker; an
-    # uncommitted add/compaction is overwritten on replay.
-    pending_compact_every: int = 8
     pending_delta_max_dels: int = 4_000_000
     _pages_prepared: DataFrame | None = field(default=None, repr=False)
     _min_cap: int | None = field(default=None, repr=False)
@@ -400,55 +385,40 @@ class CrawlEngine:
     def _path(self, name: str, tag: str) -> str:
         return os.path.join(self.state_dir, name, tag)
 
-    def _load_pending(self, version: int, commit: dict | None = None) -> DataFrame:
-        """Merge-on-read view of the frontier at ``version``: the last
-        compacted base, plus the add deltas after it, minus everything
-        fetched since (the results parquet IS the equality-delete
-        file — no separate delete state exists). The delete set is ≤
-        ``pending_delta_max_dels`` by the writer's compaction invariant,
-        so the anti-join broadcasts the deletes and never shuffles the
-        frontier. Legacy commits (no ``pending_base``) read the full
-        copy at ``version`` unchanged."""
-        commit = commit if commit is not None else self._read_commit(version)
-        base = int(commit.get("pending_base", version))
-        df = self.spark.read.schema(PENDING_SCHEMA).parquet(self._path("pending", f"v{base}"))
-        # Commit invariant: every batch in (base, version] ran without
-        # compacting, and each such batch writes its pending_add/b{i}
-        # synchronously BEFORE its commit marker — so a missing add
-        # delta is lost state (bad vacuum, manual deletion), never a
-        # legitimate gap. Fail loudly instead of silently dropping
-        # frontier URLs.
-        adds = []
-        for i in range(base + 1, version + 1):
-            p = self._path("pending_add", f"b{i}")
+    def _read_log(
+        self, name: str, schema: str, base: int, version: int, tag: str = "b"
+    ) -> DataFrame:
+        """Log ``name`` at ``version``: ``{tag}{base}`` ∪ … ∪
+        ``{tag}{version}``. Every batch writes its entry before its
+        commit marker and vacuum keeps what the last two commits read,
+        so a missing entry is lost state: raise rather than read less."""
+        paths = [self._path(name, f"{tag}{i}") for i in range(base, version + 1)]
+        for p in paths:
             if not os.path.isdir(p):
-                raise FileNotFoundError(
-                    f"frontier state corrupt: commit v{version} (pending_base="
-                    f"{base}) references missing add delta {p}"
-                )
-            adds.append(p)
-        if adds:
-            df = df.unionByName(self.spark.read.schema(PENDING_SCHEMA).parquet(*adds))
-        dels = [
-            p
-            for i in range(base + 1, version + 1)
-            if os.path.isdir(p := os.path.join(self.state_dir, "results", f"batch={i}"))
-        ]
-        if dels:
-            fetched = (
-                self.spark.read.schema(RESULTS_SCHEMA).parquet(*dels).select("url_hash")
-            )
-            df = df.join(F.broadcast(fetched), "url_hash", "left_anti")
-        return df
+                raise FileNotFoundError(f"crawl state lost: commit v{version} reads {p}")
+        return self.spark.read.schema(schema).parquet(*paths)
 
-    def _load_seen_union(self, version: int, base: int = 0) -> DataFrame:
-        """Union of seen deltas b{base}..b{version} — ``base`` comes
-        from the commit's ``seen_base`` (the last compaction point),
-        so a long crawl reads O(compact_every) directories, not one
-        per batch."""
-        paths = [self._path("seen", f"b{i}") for i in range(base, version + 1)]
-        paths = [p for p in paths if os.path.isdir(p)]
-        return self.spark.read.schema(SEEN_SCHEMA).parquet(*paths)
+    def _write_log(self, df: DataFrame, name: str, version: int) -> None:
+        df.write.mode("overwrite").parquet(self._path(name, f"b{version}"))
+
+    def _load_pending(self, version: int, commit: dict) -> DataFrame:
+        """The queue at ``version``: its log minus every url fetched
+        after the base (the results parquet is the delete file). The
+        writer compacts before that set passes ``pending_delta_max_dels``,
+        so the anti-join broadcasts it and never shuffles the queue."""
+        base = commit["pending_base"]
+        # the full copy and the deltas are two scans, each sizing its
+        # own splits: one scan over both packs the small files into
+        # fewer tasks, an executed plan the crawl's per-batch task
+        # counts were not measured with (traced crawl_bulk: 45.5
+        # instead of 47.5 tasks per batch)
+        df = self._read_log("pending", PENDING_SCHEMA, base, base)
+        if base < version:
+            deltas = self._read_log("pending", PENDING_SCHEMA, base + 1, version)
+            df = df.unionByName(deltas)
+            fetched = self._read_log("results", RESULTS_SCHEMA, base + 1, version, "batch=")
+            df = df.join(F.broadcast(fetched.select("url_hash")), "url_hash", "left_anti")
+        return df
 
     def _load_bloom(self, version: int) -> DataFrame:
         return self.spark.read.schema(BLOOM_SCHEMA).parquet(self._path("bloom", f"v{version}"))
@@ -486,57 +456,29 @@ class CrawlEngine:
         tmp = os.path.join(self._commit_dir(), f".{version}.json.tmp")
         final = os.path.join(self._commit_dir(), f"{version}.json")
         with open(tmp, "w") as f:
-            json.dump(payload, f)
+            json.dump({**payload, "state_format": STATE_FORMAT}, f)
         os.rename(tmp, final)  # atomic commit point
-        self._vacuum(
-            version,
-            int(payload.get("seen_base", 0)),
-            payload.get("pending_base"),
-        )
+        if version > 0:  # the seed commit has nothing older to expire
+            self._vacuum(version, payload)
 
-    def _vacuum(self, version: int, seen_base: int, pending_base: int | None = None) -> None:
-        """Expire-snapshots table maintenance: drop state versions no
-        commit can reference anymore. Resume reads the LATEST commit
-        (version v → pending base(v) + adds(base..v], bloom/v{v}, seen
-        b{seen_base}..b{v}); recovery tolerance keeps one older commit
-        readable, so the deletable set is everything below
-        min(base(v), base(v−1)) for pending (full copies AND add
-        deltas at or below a base are folded into it), bloom ≤ v−2,
-        and seen deltas below the last compaction point — a crash at
-        any point leaves the referenced set intact. Without this, a
-        long crawl accumulates O(batches) full pending copies
-        (Iceberg's expire_snapshots exists for the same reason)."""
-        if pending_base is None:
-            pending_base = version  # legacy commit: full copy at v
+    def _vacuum(self, version: int, commit: dict) -> None:
+        """Expire-snapshots table maintenance: drop what neither commit
+        v nor commit v−1 reads, so resume from either stays possible.
+        One rule for both logs: keep b{k} from min(base(v), base(v−1)).
+        The Bloom table keeps v−1 and v. Each sweep lists the directory,
+        so a base that jumps or a vacuum that crashed leaves nothing
+        behind (Iceberg's expire_snapshots)."""
         prev = self._read_commit(version - 1)
-        prev2 = self._read_commit(version - 2)
-        prev_base = int(prev.get("pending_base", version - 1))
-        keep_from = max(0, min(pending_base, prev_base))
-        # Sweep from where the PREVIOUS vacuum's floor was, not a fixed
-        # window below keep_from: a dels-triggered compaction can
-        # advance the base by more than any fixed window in one step
-        # (and pending_compact_every is configurable), which used to
-        # leak the skipped pending/v{k} + pending_add/b{k} dirs
-        # forever. floor(v-1) = min(base(v-1), base(v-2)); the extra
-        # -16 margin re-covers a vacuum that crashed mid-sweep.
-        prev2_base = int(prev2.get("pending_base", version - 2))
-        prev_floor = max(0, min(prev_base, prev2_base))
-        for k in range(max(0, prev_floor - 16), keep_from):
-            for name in ("pending", "pending_add"):
-                p = self._path(name, f"v{k}" if name == "pending" else f"b{k}")
-                if os.path.isdir(p):
-                    shutil.rmtree(p, ignore_errors=True)
-        for k in range(max(0, version - 16), version - 1):
-            p = self._path("bloom", f"v{k}")
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-        # Seen deltas advance by compact_every per compaction — also a
-        # configurable jump, so sweep from the previous commit's base.
-        prev_seen = int(prev.get("seen_base", 0))
-        for k in range(max(0, prev_seen - 16), seen_base):
-            p = self._path("seen", f"b{k}")
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
+        for name in ("pending", "seen"):
+            key = f"{name}_base"
+            self._expire(name, "b", min(commit[key], prev[key]))
+        self._expire("bloom", "v", version - 1)
+
+    def _expire(self, name: str, tag: str, keep_from: int) -> None:
+        d = os.path.join(self.state_dir, name)
+        for n in os.listdir(d) if os.path.isdir(d) else []:
+            if n.startswith(tag) and n[len(tag):].isdigit() and int(n[len(tag):]) < keep_from:
+                shutil.rmtree(os.path.join(d, n), ignore_errors=True)
 
     # ------------------------------------------------------------- seeding
 
@@ -567,12 +509,10 @@ class CrawlEngine:
             )
         )
         pending = all_seeds if self.robots is None else robots_filter(all_seeds, self.robots)
-        pending.write.mode("overwrite").parquet(self._path("pending", "v0"))
-        all_seeds.select("url_hash").write.mode("overwrite").parquet(self._path("seen", "b0"))
-        n_seen = self.spark.read.parquet(self._path("seen", "b0")).count()
-        n_pending = self.spark.read.schema(PENDING_SCHEMA).parquet(
-            self._path("pending", "v0")
-        ).count()
+        self._write_log(pending, "pending", 0)
+        self._write_log(all_seeds.select("url_hash"), "seen", 0)
+        n_seen = self._read_log("seen", SEEN_SCHEMA, 0, 0).count()
+        n_pending = self._read_log("pending", PENDING_SCHEMA, 0, 0).count()
         self._commit(
             0,
             {
@@ -583,6 +523,8 @@ class CrawlEngine:
                 "pending_rows": int(n_pending),
                 "pending_base": 0,
                 "pending_dels": 0,
+                "links_total": 0,
+                "discovered": 0,
             },
         )
 
@@ -755,13 +697,19 @@ class CrawlEngine:
         else:
             v = self.last_version()
             prev = self._read_commit(v)
+            if prev.get("state_format") != STATE_FORMAT:
+                raise ValueError(
+                    f"{self.state_dir} commit v{v} has state format "
+                    f"{prev.get('state_format')!r}, not {STATE_FORMAT!r}: "
+                    "re-seed it with init_from_seeds"
+                )
         batch_id = v + 1
-        if prev.get("pending_rows") == 0:
+        est = prev["pending_rows"]
+        if est == 0:
             self._flush_overlap()
             return {"batch": batch_id, "fetched": 0, "done": True}
         pending = self._load_pending(v, prev)
 
-        pending_prev = prev.get("pending_rows")
         # Intermediate-sharing strategy (each choice measured — see
         # BENCH/BASELINE.md):
         #  - the global rank inside select_batch uses static url_hash
@@ -783,12 +731,10 @@ class CrawlEngine:
         #    supplies the dedup counters — before the remaining write
         #    fan-out (concurrent jobs racing on an unmaterialized cache
         #    re-execute the subtree below the cache point — ~3× waste).
-        est = int(pending_prev) if pending_prev is not None else None
-        if est is not None:
-            # the committed pending counter bounds every per-batch
-            # shuffle (links explode re-aggregates to ≤ discovered ≈
-            # O(pending)); AQE coalescing would size it, but AQE is off
-            self.spark.conf.set(self._SHUFFLE_KEY, str(self._width(est, 4)))
+        # the committed pending counter bounds every per-batch shuffle
+        # (links explode re-aggregates to ≤ discovered ≈ O(pending));
+        # AQE coalescing would size it, but AQE is off
+        self.spark.conf.set(self._SHUFFLE_KEY, str(self._width(est, 4)))
         batch = select_batch(
             pending,
             self.politeness,
@@ -796,9 +742,9 @@ class CrawlEngine:
             batch_cap=self.batch_cap,
             default_per_host=self.default_per_host,
             est_rows=est,
-            skip_caps=est is not None and self._politeness_min_cap() >= est,
+            skip_caps=self._politeness_min_cap() >= est,
         ).select("seq", "url", "url_hash", "host", "depth", "priority")
-        if est is not None and est <= SMALL_BATCH_ROWS:
+        if est <= SMALL_BATCH_ROWS:
             # The small-batch rank is a single-partition window; left
             # alone, EVERYTHING downstream of it stays one partition —
             # fetch join, gzip decode, parse, the results file, and the
@@ -864,7 +810,7 @@ class CrawlEngine:
             # itself, not one batch late)
             F.sum(F.greatest(F.col("n_links"), F.lit(0))).alias("links_total"),
         )
-        results_path = os.path.join(self.state_dir, "results", f"batch={batch_id}")
+        results_path = self._path("results", f"batch={batch_id}")
 
         # ---- phase 1: decode once, straight into the results sink
         results.write.mode("overwrite").parquet(results_path)
@@ -878,8 +824,9 @@ class CrawlEngine:
         text_match = int(m_parse["text_match"] or 0)
         links_total = int(m_parse["links_total"] or 0)
         if n_fetched == 0:
-            # nothing eligible (e.g. legacy state with robots-blocked
-            # pending rows): no state advanced, leave the last commit
+            # pending rows remain but none is eligible (every host's
+            # budget is 0, or the robots table blocks them at select
+            # time): no state advanced, leave the last commit
             batch.unpersist()
             return {"batch": batch_id, "fetched": 0, "done": True}
 
@@ -920,10 +867,10 @@ class CrawlEngine:
         else:
             discovered = discovered.withColumn("__blocked", F.lit(False))
 
-        seen_base = int(prev.get("seen_base", 0))
-        seen_union = self._load_seen_union(v, seen_base)
+        seen_base = prev["seen_base"]
+        seen_union = self._read_log("seen", SEEN_SCHEMA, seen_base, v)
         do_compact = (batch_id - seen_base) >= self.compact_every
-        seen_rows = int(prev.get("seen_rows", 0))
+        seen_rows = prev["seen_rows"]
         bloom_mode = seen_rows >= self.bloom_min_seen
         bloom, survivor_join = None, "broadcast"
         if bloom_mode:
@@ -936,16 +883,12 @@ class CrawlEngine:
             # itself — the bound is current, not last batch's count).
             # Secondary distinct-estimate trigger: see
             # survivor_distinct_limit.
-            prev_links = int(prev.get("links_total", 0) or 0)
-            prev_disc = int(prev.get("discovered", 0) or 0)
-            est_distinct = (
-                links_total * prev_disc / prev_links if prev_links > 0 and prev_disc > 0
-                else None
-            )
+            prev_links = prev["links_total"]
+            est_distinct = links_total * prev["discovered"] / prev_links if prev_links else 0
             survivor_join = (
                 "shuffle"
                 if links_total > self.survivor_broadcast_limit
-                or (est_distinct is not None and est_distinct > self.survivor_distinct_limit)
+                or est_distinct > self.survivor_distinct_limit
                 else "broadcast"
             )
         # bloom None (small seen set): one exact co-partitioned join
@@ -987,27 +930,20 @@ class CrawlEngine:
         new_pending = marked_obs.where(F.col("is_new") & ~F.col("__blocked")).select(
             *enqueue_cols
         )
-        # pending shrinks by the batch, grows by the new fetchable
-        # urls. Delta mode (the merge-on-read default) appends ONLY
-        # the new urls — the just-written results parquet is the
-        # equality-delete file for the fetched set, so the write is
-        # O(new), not O(frontier). Compaction folds the chain into a
-        # fresh base when the accumulated delete set would outgrow the
-        # read side's broadcast bound or the chain gets too long.
-        pending_base_prev = int(prev.get("pending_base", v))
-        dels_after = int(prev.get("pending_dels", 0) or 0) + n_fetched
+        # pending shrinks by the batch (the results parquet is the
+        # delete file) and grows by the new fetchable urls: the delta
+        # is just those, the compacted copy the whole queue
+        pending_base = prev["pending_base"]
+        dels_after = prev["pending_dels"] + n_fetched
         compact_pending = (
             dels_after > self.pending_delta_max_dels
-            or (batch_id - pending_base_prev) >= self.pending_compact_every
+            or (batch_id - pending_base) >= self.compact_every
         )
+        next_pending = new_pending
         if compact_pending:
             next_pending = pending.join(
                 batch.select("url_hash"), "url_hash", "left_anti"
             ).unionByName(new_pending)
-            pending_path = self._path("pending", f"v{batch_id}")
-        else:
-            next_pending = new_pending
-            pending_path = self._path("pending_add", f"b{batch_id}")
 
         def j_seen():
             delta = new_urls.select("url_hash")
@@ -1015,7 +951,7 @@ class CrawlEngine:
                 # table maintenance: fold the whole union into this
                 # batch's file so future reads start here
                 delta = seen_union.unionByName(delta)
-            delta.write.mode("overwrite").parquet(self._path("seen", f"b{batch_id}"))
+            self._write_log(delta, "seen", batch_id)
 
         def j_bloom():
             if bloom_mode:
@@ -1035,14 +971,12 @@ class CrawlEngine:
         # hit a materialized cache instead of racing to re-execute the
         # dedup subtree (~3× waste, measured). Per-partition lineage is
         # merge-on-read (metrics_table), not a per-batch write.
-        next_pending.write.mode("overwrite").parquet(pending_path)
+        self._write_log(next_pending, "pending", batch_id)
         m_dedup = obs_dedup.get
         n_discovered = int(m_dedup["nd"])
         n_new = int(m_dedup["nn"] or 0)
         n_kept = int(m_dedup["kept"] or 0)
-        pending_rows = (
-            int(pending_prev) - n_fetched + n_kept if pending_prev is not None else None
-        )
+        pending_rows = est - n_fetched + n_kept
         metrics = {
             "batch": batch_id,
             "fetched": n_fetched,
@@ -1055,7 +989,7 @@ class CrawlEngine:
             "seen_rows": seen_rows + int(n_new),
             "seen_base": batch_id if do_compact else seen_base,
             "pending_rows": pending_rows,
-            "pending_base": batch_id if compact_pending else pending_base_prev,
+            "pending_base": batch_id if compact_pending else pending_base,
             "pending_dels": 0 if compact_pending else dels_after,
             "bloom_mode": bloom_mode,
             "bloom_format": self._bloom_format() if bloom_mode else None,
@@ -1150,5 +1084,5 @@ class CrawlEngine:
     def seen_hashes(self) -> set[int]:
         self._flush_overlap()
         v = self.last_version()
-        base = int(self._read_commit(v).get("seen_base", 0))
-        return {r["url_hash"] for r in self._load_seen_union(v, base).collect()}
+        base = self._read_commit(v)["seen_base"]
+        return {r["url_hash"] for r in self._read_log("seen", SEEN_SCHEMA, base, v).collect()}

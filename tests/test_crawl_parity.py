@@ -8,6 +8,9 @@ Also: kill-after-batch-k resume ≡ uninterrupted run.
 
 from __future__ import annotations
 
+import json
+import os
+import re
 import shutil
 
 import pytest
@@ -319,13 +322,13 @@ def test_pending_delta_aggressive_compaction(spark, world, oracle_run):
     batches) — the delta-chain/compaction cycling must be
     output-invariant, the base must actually advance, and a resume
     must land mid-chain and finish identically."""
-    eng = _mk_engine(spark, world, "engine_pending_mor", pending_compact_every=2)
+    eng = _mk_engine(spark, world, "engine_pending_mor", compact_every=2)
     eng.init_from_seeds(world["seeds"])
     for _ in range(5):
         eng.run_batch()
     c5 = eng._read_commit(5)
     assert int(c5.get("pending_base", -1)) >= 2  # compaction advanced the base
-    eng2 = _mk_engine(spark, world, "engine_pending_mor", pending_compact_every=2)
+    eng2 = _mk_engine(spark, world, "engine_pending_mor", compact_every=2)
     eng2.run(max_batches=50)  # resume from disk across the chain
     assert eng2.crawl_order() == oracle_run.order
     assert eng2.seen_hashes() == oracle_run.seen
@@ -355,7 +358,7 @@ def test_pending_delta_never_compacts_same_result(spark, world, oracle_run):
         spark,
         world,
         "engine_pending_chain",
-        pending_compact_every=10_000,
+        compact_every=10_000,
         pending_delta_max_dels=1 << 40,
     )
     eng.init_from_seeds(world["seeds"])
@@ -396,6 +399,80 @@ def test_overlap_interrupted_run_resumes(spark, world, oracle_run):
     eng2.run(max_batches=50)
     assert eng2.crawl_order() == oracle_run.order
     assert eng2.seen_hashes() == oracle_run.seen
+
+
+def test_resume_from_previous_commit_after_vacuum(spark, world):
+    """Vacuum keeps the previous commit readable. With compaction every
+    2 batches, commit 4 moves both log bases past commit 3's; after
+    commit 4's marker is lost, a fresh engine resumes from commit 3 and
+    redoes batch 4 exactly as the oracle does."""
+    eng1 = _mk_engine(spark, world, "engine_vacuum_prev", compact_every=2)
+    eng1.init_from_seeds(world["seeds"])
+    eng1.run(max_batches=4)
+    eng1.close()
+    assert eng1._read_commit(4)["seen_base"] > eng1._read_commit(3)["seen_base"]
+    os.remove(os.path.join(eng1._commit_dir(), "4.json"))
+    eng2 = _mk_engine(spark, world, "engine_vacuum_prev", compact_every=2)
+    assert eng2.last_version() == 3
+    (m4,) = eng2.run(max_batches=1)
+    eng2.close()
+    orc = _mk_oracle(spark, world)
+    orc.run(max_batches=4)
+    assert eng2.crawl_order() == orc.order
+    assert eng2.seen_hashes() == orc.seen
+    assert {k: m4[k] for k in orc.metrics[3]} == orc.metrics[3]
+
+
+@pytest.fixture(scope="module")
+def short_crawl_state(spark, world):
+    """State dir of a 3-batch crawl: both logs hold b0..b3 (no
+    compaction yet) and results hold batch=1..3. Tests copy it."""
+    eng = _mk_engine(spark, world, "engine_short")
+    eng.init_from_seeds(world["seeds"])
+    eng.run(max_batches=3)
+    eng.close()
+    assert eng.last_version() == 3
+    return eng.state_dir
+
+
+def _copy_state(world, src: str, name: str) -> str:
+    dst = str(world["root"] / name)
+    shutil.copytree(src, dst)
+    return dst
+
+
+@pytest.mark.parametrize("lost", ["seen/b2", "pending/b2", "results/batch=2"])
+def test_lost_state_dir_fails_loudly(spark, world, short_crawl_state, lost):
+    """Every log entry commit 3 reads is required: a missing mid-chain
+    seen delta, pending delta or results file (pending's delete set)
+    raises instead of silently reading a smaller set."""
+    state = _copy_state(world, short_crawl_state, "lost_" + lost.replace("/", "_"))
+    path = os.path.join(state, lost)
+    shutil.rmtree(path)
+    eng = _mk_engine(spark, world, os.path.basename(state))
+    try:
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            eng.run_batch()
+    finally:
+        eng.close()
+
+
+def test_old_state_format_refused(spark, world, short_crawl_state):
+    """State whose last commit records another layout (here: none, as
+    before the compacted-log layout) is refused with a re-seed hint."""
+    state = _copy_state(world, short_crawl_state, "old_state_format")
+    commit_path = os.path.join(state, "_commits", "3.json")
+    with open(commit_path) as f:
+        payload = json.load(f)
+    del payload["state_format"]
+    with open(commit_path, "w") as f:
+        json.dump(payload, f)
+    eng = _mk_engine(spark, world, "old_state_format")
+    try:
+        with pytest.raises(ValueError, match="init_from_seeds"):
+            eng.run_batch()
+    finally:
+        eng.close()
 
 
 def test_salted_caps_path_same_result(spark, world, oracle_run, monkeypatch):

@@ -1062,9 +1062,7 @@ class CrawlEngine:
 
     def results(self) -> DataFrame:
         self._flush_overlap()
-        return self.spark.read.option("basePath", os.path.join(self.state_dir, "results")).parquet(
-            os.path.join(self.state_dir, "results", "batch=*")
-        )
+        return self.spark.read.parquet(os.path.join(self.state_dir, "results"))
 
     def metrics_table(self) -> DataFrame:
         """Per-(batch, scan-partition) lineage, computed on demand from

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -21,3 +22,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def compiled_classes(spark):
+    """Reader of the JVM's codegen compile count (``CodegenMetrics``; in
+    local mode the tasks compile in the driver JVM too). Each read first
+    waits until no job is active, so a job still finishing cannot add
+    compiles after the read."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    tracker = spark.sparkContext.statusTracker()
+
+    def read() -> int:
+        deadline = time.monotonic() + 120
+        while tracker.getActiveJobsIds():
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"jobs still active: {tracker.getActiveJobsIds()}")
+            time.sleep(0.05)
+        return int(cm.METRIC_COMPILATION_TIME().getCount())
+
+    return read

@@ -523,7 +523,26 @@ def test_metrics_table_merge_on_read(spark, world, engine_run):
     assert got == want
 
 
-def test_ref_lit_int(spark):
+def test_steady_state_batches_compile_nothing(spark, world, compiled_classes):
+    """Steady-state batches run classes that are already compiled: the
+    session's codegen cache holds a whole batch's working set, and no
+    per-batch value reaches generated source (``_ref_lit_int``). Batch 1
+    compiles the crawl's shapes and batch 2 its first-delta shapes; from
+    batch 3 on nothing is new. Bloom dedup from batch 1, the path whose
+    recompiles a 100-entry cache showed on every batch."""
+    eng = _mk_engine(spark, world, "engine_codegen", bloom_min_seen=0)
+    eng.init_from_seeds(world["seeds"])
+    compiled = []
+    for _ in range(4):
+        c0 = compiled_classes()
+        m = eng.run_batch()
+        compiled.append(compiled_classes() - c0)
+        assert m["fetched"] > 0 and m["bloom_mode"]
+    eng.close()
+    assert compiled[2:] == [0, 0], f"classes compiled per batch: {compiled}"
+
+
+def test_ref_lit_int(spark, compiled_classes):
     """_ref_lit_int: exact value semantics AND codegen-source stability.
 
     The helper exists so per-batch ids don't force a fresh Janino
@@ -549,23 +568,18 @@ def test_ref_lit_int(spark):
     )
     assert [r.b for r in vals] == [37] * 5
 
-    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-
     def run(col):
         spark.range(3).select(
             (F.col("id") + 1).alias("id2"), col.cast("int").alias("b")
         ).write.format("noop").mode("overwrite").save()
 
-    def compiles():
-        return cm.METRIC_COMPILATION_TIME().getCount()
-
     run(_ref_lit_int(100))  # warm the shape (pays its one compile)
     run(F.lit(100))
-    c0 = compiles()
+    c0 = compiled_classes()
     run(_ref_lit_int(101))
     run(_ref_lit_int(102))
-    c1 = compiles()
+    c1 = compiled_classes()
     assert c1 - c0 == 0, "new _ref_lit_int values must reuse the compiled stage"
     run(F.lit(101))
-    c2 = compiles()
+    c2 = compiled_classes()
     assert c2 - c1 > 0, "control: a new inlined literal must recompile"

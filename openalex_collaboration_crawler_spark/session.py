@@ -26,6 +26,14 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 2048
 
 
+def _default_driver_memory() -> str:
+    """min(48g, half the physical RAM): the local-mode driver JVM holds
+    every executor too, and a heap larger than the machine lets it grow
+    until the OS kills it instead of spilling."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{min(48 << 10, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "openalex_collaboration_crawler_spark",
     master: str | None = None,
@@ -56,7 +64,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory())
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

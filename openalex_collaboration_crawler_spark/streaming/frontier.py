@@ -18,13 +18,16 @@ state_dir/
                        so a batch writes O(new), not O(log). The queue
                        also drops everything fetched in (base, v]: the
                        results parquet doubles as its delete files.
-  bloom/v{N}/         (part, words)     -- incremental fixed-size Bloom
-                       filter per hash partition as an array<bigint> of
-                       m_bits/64 words, OR-merged with each delta in
-                       plain Spark SQL (never rebuilt over the full
-                       set); the commit's bloom_format names its layout
-                       and (parts, m_bits, k) -- any other recorded
-                       format is rebuilt from the seen union
+  bloom/v{N}/         (part, words)     -- incremental Bloom filter per
+                       hash partition as an array<bigint> of m_bits/64
+                       words, sized to the seen set at bloom_fpp
+                       (seen.bloom_size) and OR-merged with each delta
+                       in plain Spark SQL; when the seen set outgrows
+                       it, the deferred write rebuilds it BLOOM_GROWTH
+                       times larger from the seen union. The commit's
+                       bloom_format names its layout and (parts, m_bits,
+                       k) -- any format other than the one its seen_rows
+                       sizes is rebuilt from the seen union
   results/batch={k}/  (seq, url, ..., text, lang, n_links, batch_id)
   _commits/{N}.json   atomic commit marker (written last); records
                        each log's base and the STATE_FORMAT
@@ -56,8 +59,8 @@ tests/test_crawl_parity.py.
 
 At 10^10 URLs: pending/seen are hash-partitioned Iceberg tables; the
 seen union is compacted by table maintenance; bloom filters are sized
-m_bits ≈ 10 × capacity/partition; hot hosts are capped by politeness
-*before* any heavy work.
+m_bits ≈ 10 × capacity/partition (bloom_fpp = 0.01); hot hosts are
+capped by politeness *before* any heavy work.
 """
 
 from __future__ import annotations
@@ -88,8 +91,8 @@ from openalex_collaboration_crawler_spark.streaming.politeness import (
 from openalex_collaboration_crawler_spark.streaming.seen import (
     BLOOM_SCHEMA,
     bloom_format,
+    bloom_size,
     build_bloom_table,
-    check_bloom_params,
     mark_new_against_seen,
 )
 
@@ -114,6 +117,9 @@ RESULTS_SCHEMA = (
 # rows per task for the loop's batch-sized widths (see CrawlEngine._width):
 # keeps per-task overhead amortized over at least this many pages
 BATCH_ROWS_PER_TASK = 8192
+# Bloom words per merge task (8 MB): a smaller table merges in one task
+# and lands in one file, which the next merge and probe read in one task
+BLOOM_WORDS_PER_TASK = 1 << 20
 
 
 def _ref_lit_int(v: int):
@@ -224,8 +230,9 @@ class CrawlEngine:
     batch_cap: int = 1 << 30
     default_per_host: int = 8
     bloom_parts: int = 16
-    bloom_m_bits: int = 1 << 20
-    bloom_k: int = 5
+    # false-positive target of the Bloom prefilter; its size follows the
+    # seen set (seen.bloom_size)
+    bloom_fpp: float = 0.01
     # below this seen-set size the Bloom machinery costs more in job
     # launches than it saves in shuffle — use one exact join instead.
     # At 10^10 the threshold is crossed in the first batches and the
@@ -272,10 +279,30 @@ class CrawlEngine:
     _saved_conf: dict | None = field(default=None, repr=False)
 
     def __post_init__(self) -> None:
-        check_bloom_params(self.bloom_m_bits, self.bloom_k)
+        if not 0 < self.bloom_fpp < 1:
+            raise ValueError(f"bloom_fpp must be in (0, 1), got {self.bloom_fpp}")
 
-    def _bloom_format(self) -> dict:
-        return bloom_format(self.bloom_parts, self.bloom_m_bits, self.bloom_k)
+    def _bloom_format(self, seen_rows: int) -> dict:
+        """Format of the Bloom table over ``seen_rows`` urls: a pure
+        function of committed state, so a resumed engine chooses the same."""
+        return bloom_format(
+            self.bloom_parts, *bloom_size(seen_rows, self.bloom_parts, self.bloom_fpp)
+        )
+
+    def _build_bloom(
+        self, hashes: DataFrame, fmt: dict, prev: DataFrame | None = None
+    ) -> DataFrame:
+        """``build_bloom_table`` in ``fmt``, its width sized to the table."""
+        words = self.bloom_parts * fmt["m_bits"] // 64
+        par = self.spark.sparkContext.defaultParallelism
+        return build_bloom_table(
+            hashes,
+            n_parts=self.bloom_parts,
+            m_bits=fmt["m_bits"],
+            k=fmt["k"],
+            prev=prev,
+            width=min(par, max(1, words // BLOOM_WORDS_PER_TASK)),
+        )
 
     _ADAPTIVE_KEY = "spark.sql.adaptive.enabled"
     _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
@@ -345,9 +372,6 @@ class CrawlEngine:
                 df.unpersist()
             except Exception:  # noqa: BLE001 - session may be stopping
                 pass
-        import gc as _gc
-
-        _gc.collect()
         return ov["metrics"]
 
     def close(self) -> None:
@@ -424,23 +448,18 @@ class CrawlEngine:
         return self.spark.read.schema(BLOOM_SCHEMA).parquet(self._path("bloom", f"v{version}"))
 
     def _ensure_bloom(
-        self, version: int, seen_union: DataFrame, committed_format: dict | None
+        self, version: int, seen_union: DataFrame, committed_format: dict | None, fmt: dict
     ) -> DataFrame:
         """Bloom table for this version — built from the full seen union
         when the engine first crosses into bloom mode (earlier batches
         ran the exact-join path and kept no table), and rebuilt when the
-        commit records another format than this engine's: a legacy
-        ``(part, blob)`` dir or other (parts, m_bits, k) would read as
-        null or misaligned words, probing every candidate wrongly and
-        dropping the old bits on the next merge."""
+        commit records another format than ``fmt``, the one its seen_rows
+        size: a legacy ``(part, blob)`` dir or other (parts, m_bits, k)
+        would read as null or misaligned words, probing every candidate
+        wrongly and dropping the old bits on the next merge."""
         path = self._path("bloom", f"v{version}")
-        if committed_format != self._bloom_format() or not os.path.isdir(path):
-            build_bloom_table(
-                seen_union,
-                n_parts=self.bloom_parts,
-                m_bits=self.bloom_m_bits,
-                k=self.bloom_k,
-            ).write.mode("overwrite").parquet(path)
+        if committed_format != fmt or not os.path.isdir(path):
+            self._build_bloom(seen_union, fmt).write.mode("overwrite").parquet(path)
         return self._load_bloom(version)
 
     def _read_commit(self, version: int) -> dict:
@@ -484,8 +503,9 @@ class CrawlEngine:
 
     def init_from_seeds(self, seeds: DataFrame) -> None:
         """v0: pending = canonicalized seeds (priority from the seed
-        list, depth 0); seen delta b0 = their hashes; bloom v0 over
-        them. Duplicate seeds collapse to max priority.
+        list, depth 0); seen b0 = their hashes. No Bloom table: the
+        first batch in bloom mode builds one from the seen union.
+        Duplicate seeds collapse to max priority.
 
         Robots-blocked seeds enter the SEEN set but not the pending
         queue (they can never be fetched; the oracle filters them at
@@ -873,8 +893,9 @@ class CrawlEngine:
         seen_rows = prev["seen_rows"]
         bloom_mode = seen_rows >= self.bloom_min_seen
         bloom, survivor_join = None, "broadcast"
+        bloom_fmt = self._bloom_format(seen_rows)
         if bloom_mode:
-            bloom = self._ensure_bloom(v, seen_union, prev.get("bloom_format")).cache()
+            bloom = self._ensure_bloom(v, seen_union, prev.get("bloom_format"), bloom_fmt).cache()
             # survivor-set size this batch is provably ≤ links_total —
             # THIS batch's pre-dedup outlink count, observed for free
             # on the results write. Broadcast when the bound is small;
@@ -892,15 +913,15 @@ class CrawlEngine:
                 else "broadcast"
             )
         # bloom None (small seen set): one exact co-partitioned join
-        marked = mark_new_against_seen(
+        marked, flagged = mark_new_against_seen(
             discovered,
             seen_union,
             bloom,
             n_parts=self.bloom_parts,
-            m_bits=self.bloom_m_bits,
-            k=self.bloom_k,
+            k=bloom_fmt["k"],
             survivor_join=survivor_join,
-        ).persist()
+        )
+        marked = marked.persist()
         # dedup metrics ride the FIRST job that materializes `marked`
         # (the pending write) as an Observation — the collect round-trip
         # this replaces was part of the measured per-batch serial floor.
@@ -954,14 +975,18 @@ class CrawlEngine:
             self._write_log(delta, "seen", batch_id)
 
         def j_bloom():
-            if bloom_mode:
-                build_bloom_table(
-                    new_urls.select("url_hash"),
-                    n_parts=self.bloom_parts,
-                    m_bits=self.bloom_m_bits,
-                    k=self.bloom_k,
-                    prev=bloom,
-                ).write.mode("overwrite").parquet(self._path("bloom", f"v{batch_id}"))
+            if not bloom_mode:
+                return
+            fmt = metrics["bloom_format"]
+            delta = new_urls.select("url_hash")
+            prev_table = bloom
+            if fmt != bloom_fmt:
+                # the seen set outgrew the table: build the next size up
+                # from the whole set, here, off the critical path
+                delta, prev_table = seen_union.unionByName(delta), None
+            self._build_bloom(delta, fmt, prev_table).write.mode("overwrite").parquet(
+                self._path("bloom", f"v{batch_id}")
+            )
 
         # ---- phase 2: the pending write MATERIALIZES `marked` (and its
         # CollectMetrics node supplies the dedup counters — the serial
@@ -992,7 +1017,7 @@ class CrawlEngine:
             "pending_base": batch_id if compact_pending else pending_base,
             "pending_dels": 0 if compact_pending else dels_after,
             "bloom_mode": bloom_mode,
-            "bloom_format": self._bloom_format() if bloom_mode else None,
+            "bloom_format": self._bloom_format(seen_rows + n_new) if bloom_mode else None,
             "done": pending_rows == 0,
         }
         batch.unpersist()
@@ -1003,7 +1028,7 @@ class CrawlEngine:
         # batch) they complete synchronously, and every accessor
         # flushes first.
         futures = [self._ensure_pool().submit(j) for j in (j_seen, j_bloom)]
-        release = [marked] + ([bloom] if bloom is not None else [])
+        release = [df for df in (marked, flagged, bloom) if df is not None]
         self._overlap = {
             "batch_id": batch_id,
             "metrics": metrics,

@@ -16,9 +16,11 @@ At 10^10 URLs neither fits one machine, so:
   Python worker or crosses Arrow. Probing drops the overwhelming
   majority of already-seen candidates before they reach the exact
   check. False positives are safe — the exact check is still consulted
-  for *survivors*; false negatives cannot occur. The numpy
-  ``fixed_bloom_build_blob`` is the reference the tests compare the JVM
-  words against bit for bit.
+  for *survivors*; false negatives cannot occur. :func:`bloom_size`
+  sizes the table to the set it holds and one false-positive target,
+  in steps of ``BLOOM_GROWTH``, so maintenance costs O(batch + set),
+  not a fixed table. The numpy ``fixed_bloom_build_blob`` is the
+  reference the tests compare the JVM words against bit for bit.
 - **Deletions** (recrawl policies) break Blooms; the fallback is a
   partition-local **cuckoo filter** (numpy, 4-slot buckets, 16-bit
   fingerprints, the Bloom's build/probe API plus ``delete``). No crawl
@@ -33,6 +35,7 @@ full filter — tens of GB at 10^10 keys — is never broadcast.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -44,6 +47,9 @@ from pyspark.sql import functions as F
 
 
 def _bloom_params(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
+    """(m, k) of the optimal filter over ``n_items`` at false-positive
+    rate ``fpp``: m = n·(−ln fpp)/ln²2 bits (a whole number of bytes, at
+    least 64) and k = (m/n)·ln 2 positions, at most 8."""
     n = max(n_items, 1)
     m = int(-n * math.log(fpp) / (math.log(2) ** 2))
     m = max(64, (m + 7) // 8 * 8)
@@ -52,9 +58,14 @@ def _bloom_params(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
 
 
 def _bloom_positions(h: np.ndarray, m: int, k: int) -> np.ndarray:
-    """Double hashing: pos_j = (h1 + j*h2) mod m, vectorized (n,k)."""
+    """Double hashing: pos_j = (h1 + j*h2) mod m, vectorized (n,k). h1
+    comes from the hash's high half: the Spark table keys its parts on the
+    low bits, which would otherwise fix h1's low bits per part and crowd
+    every first position into 1/n_parts of the part's bits (16 parts of
+    2^14 bits, k = 7, at full load: 1.55 % false positives on 400k
+    held-out hashes for a 1 % target; 1.04 % from the high half)."""
     h = h.astype(np.uint64)
-    h1 = h % np.uint64(m)
+    h1 = (h >> np.uint64(32)) % np.uint64(m)
     h2 = (h >> np.uint64(17) | np.uint64(1)) % np.uint64(m)
     j = np.arange(k, dtype=np.uint64)[None, :]
     return (h1[:, None] + j * h2[:, None]) % np.uint64(m)
@@ -102,13 +113,33 @@ def fixed_bloom_build_blob(hashes: np.ndarray, m_bits: int, k: int) -> bytes:
 
 BLOOM_SCHEMA = "part int, words array<bigint>"
 
+# a table that outgrows its set is rebuilt this many times larger: the
+# sizes are 64·4^j bits per part, so after a step the load is 1/4 to 1
+BLOOM_GROWTH = 4
+
+
+def bloom_size(n_items: int, n_parts: int, fpp: float) -> tuple[int, int]:
+    """Per-part ``(m_bits, k)`` of a Bloom table holding ``n_items`` over
+    ``n_parts`` parts at false-positive rate ``fpp``: the smallest
+    ``64 · BLOOM_GROWTH^j`` bits that :func:`_bloom_params` asks for the
+    mean part. k is (m/n)·ln 2 at the optimal m/n, so it depends on
+    ``fpp`` alone. Both are pure functions of the item count, and a
+    growing set only ever moves to the next size up."""
+    need, _ = _bloom_params(-(-n_items // n_parts), fpp)
+    m_bits = 64
+    while m_bits < need:
+        m_bits *= BLOOM_GROWTH
+    return m_bits, min(8, max(1, round(-math.log2(fpp))))
+
 
 def bloom_format(n_parts: int, m_bits: int, k: int) -> dict:
     """Identity of a Bloom table's layout and parameters. The crawl
     engine records it in each commit next to ``bloom/v{N}``; a table
     whose recorded format differs (or is missing) is rebuilt instead of
-    read, because any other layout would probe as "never seen"."""
-    return {"layout": "words", "parts": n_parts, "m_bits": m_bits, "k": k}
+    read, because any other layout would probe as "never seen".
+    ``words2`` takes h1 from the hash's high half (``words`` took it from
+    the low bits, see :func:`_bloom_positions`)."""
+    return {"layout": "words2", "parts": n_parts, "m_bits": m_bits, "k": k}
 
 
 def check_bloom_params(m_bits: int, k: int) -> None:
@@ -120,12 +151,19 @@ def check_bloom_params(m_bits: int, k: int) -> None:
         raise ValueError(f"bloom k must be >= 1, got {k}")
 
 
-def _bloom_position_cols(h: Column, m_bits: int, k: int) -> list[Column]:
+# The size of a table never reaches generated source: the build reads its
+# mask through codegen's references array and the probe derives it from
+# the words it meets, so a growth step compiles nothing new. The Columns
+# are built once per process, as functions/url.py does for the
+# canonicalizer (each costs tens of py4j round trips).
+
+
+def _bloom_position_cols(h: Column, mask: Column, k: int) -> list[Column]:
     """The k bit positions of :func:`_bloom_positions`, in signed int64:
-    with M = m_bits - 1 a power-of-two mask, ``x & M`` is ``x mod m``
-    on the unsigned bit pattern and ``>>>`` is the unsigned shift."""
-    mask = F.lit(m_bits - 1).cast("bigint")
-    h1 = h.bitwiseAND(mask)
+    with ``mask`` = m_bits - 1 for a power-of-two m_bits, ``x & mask`` is
+    ``x mod m_bits`` on the unsigned bit pattern and ``>>>`` is the
+    unsigned shift."""
+    h1 = F.shiftrightunsigned(h, 32).bitwiseAND(mask)
     h2 = F.shiftrightunsigned(h, 17).bitwiseOR(F.lit(1).cast("bigint")).bitwiseAND(mask)
     return [(h1 + h2 * j).bitwiseAND(mask) for j in range(k)]
 
@@ -135,6 +173,40 @@ def _bit(p: Column) -> Column:
     return F.call_function("shiftleft", F.lit(1).cast("bigint"), p.bitwiseAND(63).cast("int"))
 
 
+def _ref(v: int, row: Column) -> Column:
+    """``v``, read from codegen's references array instead of inlined
+    into generated source: an array literal is a reference, and an index
+    computed from ``row`` (any non-null bigint column; Catalyst does not
+    fold ``x * 0``) keeps the lookup from folding back into a constant.
+    Unlike ``frontier._ref_lit_int`` it is deterministic, so it may sit
+    inside a generator or below a join."""
+    return F.element_at(F.lit([v]), (row * 0 + 1).cast("int"))
+
+
+@functools.cache
+def _bloom_bit_rows(hash_col: str, n_parts: int, m_bits: int, k: int) -> tuple[Column, Column]:
+    """``(part, pos)`` of every bit a hash sets, ``pos`` as an explode."""
+    h = F.col(hash_col)
+    mask = _ref(m_bits - 1, h).cast("bigint")
+    part = F.pmod(h, F.lit(n_parts)).cast("int").alias("part")
+    return part, F.explode(F.array(*_bloom_position_cols(h, mask, k))).alias("pos")
+
+
+@functools.cache
+def _bloom_hit(hash_col: str, k: int) -> Column:
+    """Maybe-seen flag of a candidate joined to its part's ``words``: a
+    codegen'd AND of k single-bit word tests, masked by the words' own
+    size. A part without words probes as maybe-seen."""
+    h = F.col(hash_col)
+    mask = F.shiftleft(F.size("words").cast("bigint"), 6) - 1
+    hit = None
+    for p in _bloom_position_cols(h, mask, k):
+        word = F.element_at("words", F.shiftright(p, 6).cast("int") + 1)
+        term = word.bitwiseAND(_bit(p)) != 0
+        hit = term if hit is None else hit & term
+    return F.coalesce(hit, F.lit(True)).alias("maybe_seen")
+
+
 def build_bloom_table(
     hashes: DataFrame,
     hash_col: str = "url_hash",
@@ -142,6 +214,7 @@ def build_bloom_table(
     m_bits: int = 1 << 20,
     k: int = 5,
     prev: DataFrame | None = None,
+    width: int | None = None,
 ) -> DataFrame:
     """(part, words) Bloom table over ``hashes``, OR-ed into ``prev``.
 
@@ -152,22 +225,20 @@ def build_bloom_table(
     one row per word, unioned with one row per new bit, OR-ed per word
     and collected back in word order — plain Spark SQL, no Python
     worker. Incremental maintenance thus costs O(|hashes| + table), never
-    a rescan of the full seen set."""
+    a rescan of the full seen set. ``width`` is the merge's task count
+    and the table's file count (default: the session's shuffle width)."""
     check_bloom_params(m_bits, k)
-    n_words = m_bits // 64
     if prev is None:
-        prev_words = hashes.sparkSession.range(n_parts * n_words).select(
-            F.shiftright("id", n_words.bit_length() - 1).cast("int").alias("part"),
-            F.col("id").bitwiseAND(n_words - 1).cast("int").alias("w"),
-            F.lit(0).cast("bigint").alias("word"),
+        n_words = m_bits // 64
+        prev_words = hashes.sparkSession.range(n_parts).select(
+            F.col("id").cast("int").alias("part"),
+            F.posexplode(
+                F.array_repeat(F.lit(0).cast("bigint"), _ref(n_words, F.col("id")).cast("int"))
+            ).alias("w", "word"),
         )
     else:
         prev_words = prev.select("part", F.posexplode("words").alias("w", "word"))
-    h = F.col(hash_col)
-    new_words = hashes.select(
-        F.pmod(h, F.lit(n_parts)).cast("int").alias("part"),
-        F.explode(F.array(*_bloom_position_cols(h, m_bits, k))).alias("pos"),
-    ).select(
+    new_words = hashes.select(*_bloom_bit_rows(hash_col, n_parts, m_bits, k)).select(
         "part",
         F.shiftright("pos", 6).cast("int").alias("w"),
         _bit(F.col("pos")).alias("word"),
@@ -176,9 +247,9 @@ def build_bloom_table(
     # on part also clusters every (part, w)); letting each aggregation
     # shuffle on its own keys measured 0.73 vs 0.55 s per merge of 25k
     # new bits into 16 parts x 2^20 bits (local[4], 4-core x86 VM)
+    merged = prev_words.unionByName(new_words)
     return (
-        prev_words.unionByName(new_words)
-        .repartition("part")
+        (merged.repartition("part") if width is None else merged.repartition(width, "part"))
         .groupBy("part", "w")
         .agg(F.bit_or("word").alias("word"))
         .groupBy("part")
@@ -187,48 +258,27 @@ def build_bloom_table(
     )
 
 
-def _bloom_flag(
-    candidates: DataFrame,
-    bloom_table: DataFrame,
-    hash_col: str,
-    n_parts: int,
-    m_bits: int,
-    k: int,
-) -> DataFrame:
-    """Candidates + ``maybe_seen``: each candidate meets its part's words
-    in an equi-join on ``part`` (Spark broadcasts the table when it is
-    small and shuffles both sides when it is not, so the filter is never
-    replicated per row at scale), and the flag is a codegen'd AND of k
-    single-bit word tests. A part without words probes as maybe-seen,
-    which only sends its candidates to the exact check."""
-    h = F.col(hash_col)
-    keyed = candidates.withColumn("part", F.pmod(h, F.lit(n_parts)).cast("int"))
-    joined = keyed.join(bloom_table.select("part", "words"), "part", "left")
-    hit = None
-    for p in _bloom_position_cols(h, m_bits, k):
-        word = F.element_at("words", F.shiftright(p, 6).cast("int") + 1)
-        term = word.bitwiseAND(_bit(p)) != 0
-        hit = term if hit is None else hit & term
-    return joined.withColumn("maybe_seen", F.coalesce(hit, F.lit(True))).drop("words", "part")
-
-
 def mark_new_against_seen(
     candidates: DataFrame,
     seen: DataFrame,
     bloom_table: DataFrame | None = None,
     hash_col: str = "url_hash",
     n_parts: int = 32,
-    m_bits: int = 1 << 20,
     k: int = 5,
     survivor_join: str = "broadcast",
-) -> DataFrame:
-    """Candidates + exact ``is_new`` flag.
+) -> tuple[DataFrame, DataFrame | None]:
+    """``(marked, flagged)``: the candidates + exact ``is_new`` flag, and
+    the persisted probe output ``marked`` reads (None without a Bloom
+    table). Unpersist ``flagged`` once done with ``marked``.
 
     Without a ``bloom_table`` this is ONE co-partitioned left join
     against the seen table: while the seen set is small (the crawl's
     ``bloom_min_seen``) it beats the Bloom machinery's extra broadcast
     and merge jobs. With one, the Bloom probe runs first and only the
     maybe-seen *survivors* are exact-checked against the seen table.
+    Each candidate meets its part's words in an equi-join on ``part``
+    (Spark broadcasts the table when it is small and shuffles both sides
+    when it is not, so the filter is never replicated per row at scale).
 
     survivor_join (Bloom path only):
       - ``"broadcast"``: survivors broadcast into a semi-join that only
@@ -242,20 +292,27 @@ def mark_new_against_seen(
         bucketed on the hash, so "shuffle" moves only the candidates.
 
     The flagged candidates feed both the survivor set and the final
-    join, so the probe is planned twice; both copies read the same
-    reused candidate exchange and the same broadcast filter, so only the
-    codegen'd bit tests themselves run twice.
+    join, and Catalyst shares no subplan between the two, so ``flagged``
+    is persisted: the first job that reads it (the survivor broadcast,
+    or the shuffle join's first stage) runs the candidate subtree and
+    the probe once, and the other branch reads the cache. No job runs
+    before the caller's action.
 
-    Callers should ``.cache()`` the result before taking multiple
-    actions on it (the probe + scans re-execute otherwise)."""
+    Callers should ``.cache()`` ``marked`` before taking multiple
+    actions on it (the exact check re-executes otherwise)."""
     if bloom_table is None:
-        return (
+        marked = (
             candidates.join(seen.select(hash_col).withColumn("__m", F.lit(1)), hash_col, "left")
             .withColumn("is_new", F.col("__m").isNull())
             .drop("__m")
         )
-    check_bloom_params(m_bits, k)
-    flagged = _bloom_flag(candidates, bloom_table, hash_col, n_parts, m_bits, k)
+        return marked, None
+    keyed = candidates.withColumn("part", F.pmod(F.col(hash_col), F.lit(n_parts)).cast("int"))
+    flagged = (
+        keyed.join(bloom_table.select("part", "words"), "part", "left")
+        .select(*candidates.columns, _bloom_hit(hash_col, k))
+        .persist()
+    )
     survivors = flagged.where(F.col("maybe_seen")).select(hash_col)
     if survivor_join == "broadcast":
         matched = (
@@ -272,7 +329,7 @@ def mark_new_against_seen(
         )
         out = flagged.join(matched, hash_col, "left")
     out = out.withColumn("is_new", ~F.col("maybe_seen") | F.col("__matched").isNull())
-    return out.drop("__matched", "maybe_seen")
+    return out.drop("__matched", "maybe_seen"), flagged
 
 
 # ------------------------------------------------------------ cuckoo core

@@ -187,51 +187,78 @@ def test_bloom_forced_same_result(spark, world, oracle_run):
     assert eng.seen_hashes() == oracle_run.seen
 
 
-def test_legacy_bloom_format_rebuilt_on_resume(spark, world, oracle_run):
-    """State written before the word-array Bloom layout: bloom/v{N} holds
-    ``(part, blob)`` numpy blobs and the commit records no bloom_format.
-    Read with the words schema it would give null words; the engine must
-    rebuild it from the seen union and still match the oracle."""
-    import json
-    import os
+def _old_words(hashes, n_parts: int, m_bits: int, k: int) -> list[tuple[int, list[int]]]:
+    """``(part, words)`` rows of the fixed-size ``words`` layout, whose
+    double hashing took h1 from the hash's low bits."""
+    import numpy as np
 
+    rows = []
+    for part in range(n_parts):
+        h = hashes[np.mod(hashes, n_parts) == part].view(np.uint64)
+        m = np.uint64(m_bits)
+        h1, h2 = h % m, (h >> np.uint64(17) | np.uint64(1)) % m
+        pos = ((h1[:, None] + np.arange(k, dtype=np.uint64)[None, :] * h2[:, None]) % m).ravel()
+        bits = np.zeros(m_bits // 8, dtype=np.uint8)
+        np.bitwise_or.at(bits, pos // 8, (1 << (pos % 8)).astype(np.uint8))
+        rows.append((part, np.frombuffer(bits.tobytes(), dtype="<i8").tolist()))
+    return rows
+
+
+def test_legacy_bloom_format_rebuilt_on_resume(spark, world):
+    """State written by earlier Bloom layouts: ``(part, blob)`` numpy
+    blobs with no bloom_format in the commit, and the fixed ``words``
+    table of 2^20 bits and k = 5 per part (h1 from the low bits). Probed
+    as the current format either would flag seen urls as new; the engine
+    must rebuild the table from the seen union on resume, record the
+    format its seen set sizes, and match the oracle for two more batches."""
     import numpy as np
 
     from openalex_collaboration_crawler_spark.streaming.seen import fixed_bloom_build_blob
 
-    eng1 = _mk_engine(spark, world, "engine_legacy_bloom", bloom_min_seen=0)
-    eng1.init_from_seeds(world["seeds"])
-    for _ in range(2):
-        eng1.run_batch()
-    v = eng1.last_version()
-    assert eng1._read_commit(v).get("bloom_format") is not None
-    hashes = np.array(sorted(eng1.seen_hashes()), dtype=np.int64)
-    blobs = [
-        (
-            part,
-            fixed_bloom_build_blob(
-                hashes[np.mod(hashes, eng1.bloom_parts) == part].view(np.uint64),
-                eng1.bloom_m_bits,
-                eng1.bloom_k,
-            ),
-        )
-        for part in range(eng1.bloom_parts)
-    ]
-    spark.createDataFrame(blobs, "part int, blob binary").write.mode("overwrite").parquet(
-        eng1._path("bloom", f"v{v}")
-    )
-    commit_path = os.path.join(eng1._commit_dir(), f"{v}.json")
-    with open(commit_path) as f:
-        payload = json.load(f)
-    del payload["bloom_format"]
-    with open(commit_path, "w") as f:
-        json.dump(payload, f)
+    orc = _mk_oracle(spark, world)
+    orc.run(max_batches=4)
+    legacy = {
+        "blob": (
+            "part int, blob binary",
+            lambda h, parts: [
+                (p, fixed_bloom_build_blob(h[np.mod(h, parts) == p].view(np.uint64), 1 << 20, 5))
+                for p in range(parts)
+            ],
+            None,
+        ),
+        "fixed_words": (
+            "part int, words array<bigint>",
+            lambda h, parts: _old_words(h, parts, 1 << 20, 5),
+            {"layout": "words", "parts": 4, "m_bits": 1 << 20, "k": 5},
+        ),
+    }
+    for name, (schema, rows, fmt) in legacy.items():
+        state = f"engine_legacy_bloom_{name}"
+        eng1 = _mk_engine(spark, world, state, bloom_min_seen=0)
+        eng1.init_from_seeds(world["seeds"])
+        for _ in range(2):
+            eng1.run_batch()
+        v = eng1.last_version()
+        hashes = np.array(sorted(eng1.seen_hashes()), dtype=np.int64)
+        spark.createDataFrame(rows(hashes, eng1.bloom_parts), schema).write.mode(
+            "overwrite"
+        ).parquet(eng1._path("bloom", f"v{v}"))
+        commit_path = os.path.join(eng1._commit_dir(), f"{v}.json")
+        with open(commit_path) as f:
+            payload = json.load(f)
+        payload["bloom_format"] = fmt
+        with open(commit_path, "w") as f:
+            json.dump(payload, f)
 
-    eng2 = _mk_engine(spark, world, "engine_legacy_bloom", bloom_min_seen=0)
-    metrics = eng2.run(max_batches=50)
-    assert all(m.get("bloom_mode") for m in metrics if m.get("fetched"))
-    assert eng2.crawl_order() == oracle_run.order
-    assert eng2.seen_hashes() == oracle_run.seen
+        eng2 = _mk_engine(spark, world, state, bloom_min_seen=0)
+        metrics = eng2.run(max_batches=2)
+        keys = ("batch", "fetched", "discovered", "new_urls", "deduped")
+        got = [{k: m[k] for k in keys} for m in metrics]
+        assert got == [{k: m[k] for k in keys} for m in orc.metrics[2:]], name
+        assert eng2.crawl_order() == orc.order, name
+        assert eng2.seen_hashes() == orc.seen, name
+        last = eng2._read_commit(4)
+        assert last["bloom_format"] == eng2._bloom_format(last["seen_rows"]), name
 
 
 def test_range_rank_path_same_result(spark, world, oracle_run, monkeypatch):

@@ -143,15 +143,18 @@ def test_bloom_dedup_plans_stay_in_the_jvm(spark, tmp_path):
     cand = spark.range(0, 1000).select(
         (F.col("id") * 7919).alias("url_hash"), F.col("id").alias("payload")
     )
-    plans = {
+    marks = {
         join: mark_new_against_seen(cand, seen, bloom, n_parts=4, survivor_join=join)
         for join in ("broadcast", "shuffle")
     }
+    plans = {join: marked for join, (marked, _) in marks.items()}
     plans["merge"] = build_bloom_table(cand.select("url_hash"), n_parts=4, prev=bloom)
     for name, df in plans.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         for node in PYTHON_NODES:
             assert node not in plan, f"{name}: {node} in the executed plan"
+    for _, flagged in marks.values():
+        flagged.unpersist()
 
 
 PAIR_OPERATORS = {

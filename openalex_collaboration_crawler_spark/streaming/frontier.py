@@ -94,6 +94,7 @@ from openalex_collaboration_crawler_spark.streaming.seen import (
     bloom_size,
     build_bloom_table,
     mark_new_against_seen,
+    ref_lit,
 )
 
 PENDING_SCHEMA = (
@@ -117,36 +118,6 @@ RESULTS_SCHEMA = (
 # rows per task for the loop's batch-sized widths (see CrawlEngine._width):
 # keeps per-task overhead amortized over at least this many pages
 BATCH_ROWS_PER_TASK = 8192
-# Bloom words per merge task (8 MB): a smaller table merges in one task
-# and lands in one file, which the next merge and probe read in one task
-BLOOM_WORDS_PER_TASK = 1 << 20
-
-
-def _ref_lit_int(v: int):
-    """Integer literal carried as a codegen *reference* instead of an
-    inlined source constant — evaluates to exactly ``v``.
-
-    A primitive ``F.lit(v)`` is inlined into the generated Java source,
-    so any stage whose plan embeds a per-batch id produces a brand-new
-    source string every batch → a fresh Janino compile (~40-70 ms,
-    driver-blocking) plus cold-JIT first executions, every batch of
-    every crawl (measured via CodegenMetrics: 4-6 recompiles per warm
-    batch, ~85 per cold crawl). A single-element ARRAY literal is
-    non-primitive, so codegen emits it via the ``references`` array —
-    the source is identical for every value — and indexing it with
-    ``1 + 0·rand(42)`` (non-foldable because rand is flagged
-    non-deterministic; the seed is pinned so ITS source is stable too)
-    stops ConstantFolding from collapsing the whole thing back into an
-    inlined primitive. ``shuffle()`` would do the same but draws a
-    random per-analysis seed that gets inlined, defeating the purpose.
-    Verified: new values trigger 0 new stage compiles vs 2 for
-    ``F.lit`` (tests/test_crawl_parity.py::test_ref_lit_int).
-
-    Use it only in a plan's top-level output projection (the columns a
-    write emits), never below a filter or join. The ``rand`` makes its
-    Project nondeterministic, which stops predicate pushdown and project
-    collapsing through it: a filter above it would stay above it."""
-    return F.element_at(F.lit([v]), (F.rand(42) * 0 + 1).cast("int"))
 
 
 def decode_and_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -287,21 +258,6 @@ class CrawlEngine:
         function of committed state, so a resumed engine chooses the same."""
         return bloom_format(
             self.bloom_parts, *bloom_size(seen_rows, self.bloom_parts, self.bloom_fpp)
-        )
-
-    def _build_bloom(
-        self, hashes: DataFrame, fmt: dict, prev: DataFrame | None = None
-    ) -> DataFrame:
-        """``build_bloom_table`` in ``fmt``, its width sized to the table."""
-        words = self.bloom_parts * fmt["m_bits"] // 64
-        par = self.spark.sparkContext.defaultParallelism
-        return build_bloom_table(
-            hashes,
-            n_parts=self.bloom_parts,
-            m_bits=fmt["m_bits"],
-            k=fmt["k"],
-            prev=prev,
-            width=min(par, max(1, words // BLOOM_WORDS_PER_TASK)),
         )
 
     _ADAPTIVE_KEY = "spark.sql.adaptive.enabled"
@@ -459,7 +415,9 @@ class CrawlEngine:
         wrongly and dropping the old bits on the next merge."""
         path = self._path("bloom", f"v{version}")
         if committed_format != fmt or not os.path.isdir(path):
-            self._build_bloom(seen_union, fmt).write.mode("overwrite").parquet(path)
+            build_bloom_table(
+                seen_union, n_parts=fmt["parts"], m_bits=fmt["m_bits"], k=fmt["k"]
+            ).write.mode("overwrite").parquet(path)
         return self._load_bloom(version)
 
     def _read_commit(self, version: int) -> dict:
@@ -817,7 +775,7 @@ class CrawlEngine:
             F.size("links").alias("n_links"),
             "parse_ok",
             "text_match",
-            _ref_lit_int(batch_id).cast("int").alias("batch_id"),
+            ref_lit(batch_id, F.col("url_hash")).cast("int").alias("batch_id"),
         ).observe(
             obs,
             F.count(F.lit(1)).alias("fetched"),
@@ -942,7 +900,7 @@ class CrawlEngine:
             F.col("host"),
             F.col("depth"),
             F.col("priority"),
-            _ref_lit_int(batch_id).cast("int").alias("batch_enqueued"),
+            ref_lit(batch_id, F.col("url_hash")).cast("int").alias("batch_enqueued"),
         ]
         # j_seen/j_bloom read plain `marked` (no CollectMetrics in their
         # plans), so the observation fires exactly once — in the
@@ -984,9 +942,9 @@ class CrawlEngine:
                 # the seen set outgrew the table: build the next size up
                 # from the whole set, here, off the critical path
                 delta, prev_table = seen_union.unionByName(delta), None
-            self._build_bloom(delta, fmt, prev_table).write.mode("overwrite").parquet(
-                self._path("bloom", f"v{batch_id}")
-            )
+            build_bloom_table(
+                delta, n_parts=fmt["parts"], m_bits=fmt["m_bits"], k=fmt["k"], prev=prev_table
+            ).write.mode("overwrite").parquet(self._path("bloom", f"v{batch_id}"))
 
         # ---- phase 2: the pending write MATERIALIZES `marked` (and its
         # CollectMetrics node supplies the dedup counters — the serial

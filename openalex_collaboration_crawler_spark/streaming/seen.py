@@ -49,12 +49,13 @@ from pyspark.sql import functions as F
 def _bloom_params(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
     """(m, k) of the optimal filter over ``n_items`` at false-positive
     rate ``fpp``: m = n·(−ln fpp)/ln²2 bits (a whole number of bytes, at
-    least 64) and k = (m/n)·ln 2 positions, at most 8."""
+    least 64) and k = (m/n)·ln 2 = −log2 fpp positions, at most 8. k
+    depends on ``fpp`` alone, so a larger m than asked for keeps it and
+    only lowers the rate."""
     n = max(n_items, 1)
     m = int(-n * math.log(fpp) / (math.log(2) ** 2))
     m = max(64, (m + 7) // 8 * 8)
-    k = max(1, round(m / n * math.log(2)))
-    return m, min(k, 8)
+    return m, min(8, max(1, round(-math.log2(fpp))))
 
 
 def _bloom_positions(h: np.ndarray, m: int, k: int) -> np.ndarray:
@@ -116,20 +117,25 @@ BLOOM_SCHEMA = "part int, words array<bigint>"
 # a table that outgrows its set is rebuilt this many times larger: the
 # sizes are 64·4^j bits per part, so after a step the load is 1/4 to 1
 BLOOM_GROWTH = 4
+# words per merge task. Merging 25k new hashes into 16 parts (local[4],
+# 4-core x86 VM, median of 6) took at 1 / 2 / 4 tasks: 2^16 words
+# 0.45 / 0.38 / 0.41 s, 2^18 words 1.01 / 0.72 / 0.56 s, 2^20 words
+# 2.36 / 1.56 / 1.27 s. At 2^12 and 2^14 words the task count moved
+# nothing beyond noise, and one task writes the table as one file.
+BLOOM_WORDS_PER_TASK = 1 << 15
 
 
 def bloom_size(n_items: int, n_parts: int, fpp: float) -> tuple[int, int]:
     """Per-part ``(m_bits, k)`` of a Bloom table holding ``n_items`` over
     ``n_parts`` parts at false-positive rate ``fpp``: the smallest
     ``64 · BLOOM_GROWTH^j`` bits that :func:`_bloom_params` asks for the
-    mean part. k is (m/n)·ln 2 at the optimal m/n, so it depends on
-    ``fpp`` alone. Both are pure functions of the item count, and a
-    growing set only ever moves to the next size up."""
-    need, _ = _bloom_params(-(-n_items // n_parts), fpp)
+    mean part, and its k. Both are pure functions of the item count, and
+    a growing set only ever moves to the next size up."""
+    need, k = _bloom_params(-(-n_items // n_parts), fpp)
     m_bits = 64
     while m_bits < need:
         m_bits *= BLOOM_GROWTH
-    return m_bits, min(8, max(1, round(-math.log2(fpp))))
+    return m_bits, k
 
 
 def bloom_format(n_parts: int, m_bits: int, k: int) -> dict:
@@ -173,21 +179,34 @@ def _bit(p: Column) -> Column:
     return F.call_function("shiftleft", F.lit(1).cast("bigint"), p.bitwiseAND(63).cast("int"))
 
 
-def _ref(v: int, row: Column) -> Column:
-    """``v``, read from codegen's references array instead of inlined
-    into generated source: an array literal is a reference, and an index
-    computed from ``row`` (any non-null bigint column; Catalyst does not
-    fold ``x * 0``) keeps the lookup from folding back into a constant.
-    Unlike ``frontier._ref_lit_int`` it is deterministic, so it may sit
-    inside a generator or below a join."""
-    return F.element_at(F.lit([v]), (row * 0 + 1).cast("int"))
+def ref_lit(v: int, row: Column) -> Column:
+    """Integer ``v``, read from codegen's references array instead of
+    inlined into generated source, so a plan that carries a per-batch
+    value (a batch id, a table size) compiles the same classes for every
+    value. A primitive ``F.lit(v)`` is inlined: each new value is a new
+    source string, a fresh Janino compile (~40-70 ms, driver-blocking)
+    and cold-JIT first executions, 4-6 per crawl batch as measured by
+    CodegenMetrics. An array literal is non-primitive and goes through
+    the references array; indexing it with ``(row & 0) + 1`` (``row`` a
+    bigint column without null values) keeps the optimizer from
+    collapsing the lookup back into a primitive, because Catalyst does
+    not simplify ``x & 0`` for a non-foldable ``x``. (It does fold
+    ``x * 0`` when ``x`` is not nullable.) The expression is
+    deterministic, so it may sit anywhere in a plan: a generator, below a
+    filter or a join.
+
+    Coupled to the Spark version (written against 4.1): an optimizer rule
+    that simplified ``x & 0`` would inline the value again. The result
+    stays correct; only the recompiles come back, which
+    tests/test_crawl_parity.py::test_ref_lit_int detects."""
+    return F.element_at(F.lit([v]), (row.bitwiseAND(F.lit(0)) + 1).cast("int"))
 
 
 @functools.cache
 def _bloom_bit_rows(hash_col: str, n_parts: int, m_bits: int, k: int) -> tuple[Column, Column]:
     """``(part, pos)`` of every bit a hash sets, ``pos`` as an explode."""
     h = F.col(hash_col)
-    mask = _ref(m_bits - 1, h).cast("bigint")
+    mask = ref_lit(m_bits - 1, h).cast("bigint")
     part = F.pmod(h, F.lit(n_parts)).cast("int").alias("part")
     return part, F.explode(F.array(*_bloom_position_cols(h, mask, k))).alias("pos")
 
@@ -214,7 +233,6 @@ def build_bloom_table(
     m_bits: int = 1 << 20,
     k: int = 5,
     prev: DataFrame | None = None,
-    width: int | None = None,
 ) -> DataFrame:
     """(part, words) Bloom table over ``hashes``, OR-ed into ``prev``.
 
@@ -225,15 +243,18 @@ def build_bloom_table(
     one row per word, unioned with one row per new bit, OR-ed per word
     and collected back in word order — plain Spark SQL, no Python
     worker. Incremental maintenance thus costs O(|hashes| + table), never
-    a rescan of the full seen set. ``width`` is the merge's task count
-    and the table's file count (default: the session's shuffle width)."""
+    a rescan of the full seen set. The merge runs one task per
+    ``BLOOM_WORDS_PER_TASK`` words, up to the session's parallelism, and
+    writes one file per task."""
     check_bloom_params(m_bits, k)
+    n_words = m_bits // 64
+    width = max(1, n_parts * n_words // BLOOM_WORDS_PER_TASK)
+    width = min(width, n_parts, hashes.sparkSession.sparkContext.defaultParallelism)
     if prev is None:
-        n_words = m_bits // 64
         prev_words = hashes.sparkSession.range(n_parts).select(
             F.col("id").cast("int").alias("part"),
             F.posexplode(
-                F.array_repeat(F.lit(0).cast("bigint"), _ref(n_words, F.col("id")).cast("int"))
+                F.array_repeat(F.lit(0).cast("bigint"), ref_lit(n_words, F.col("id")).cast("int"))
             ).alias("w", "word"),
         )
     else:
@@ -249,7 +270,7 @@ def build_bloom_table(
     # new bits into 16 parts x 2^20 bits (local[4], 4-core x86 VM)
     merged = prev_words.unionByName(new_words)
     return (
-        (merged.repartition("part") if width is None else merged.repartition(width, "part"))
+        merged.repartition(width, "part")
         .groupBy("part", "w")
         .agg(F.bit_or("word").alias("word"))
         .groupBy("part")

@@ -206,30 +206,38 @@ def _old_words(hashes, n_parts: int, m_bits: int, k: int) -> list[tuple[int, lis
 
 def test_legacy_bloom_format_rebuilt_on_resume(spark, world):
     """State written by earlier Bloom layouts: ``(part, blob)`` numpy
-    blobs with no bloom_format in the commit, and the fixed ``words``
-    table of 2^20 bits and k = 5 per part (h1 from the low bits). Probed
-    as the current format either would flag seen urls as new; the engine
-    must rebuild the table from the seen union on resume, record the
-    format its seen set sizes, and match the oracle for two more batches."""
+    blobs with no bloom_format in the commit; the fixed ``words`` table of
+    2^20 bits and k = 5 per part (h1 from the low bits); and a ``words``
+    table at the very (parts, m_bits, k) the engine sizes now, so only
+    the layout tells it apart. Probed as the current format each would
+    flag seen urls as new; the engine must rebuild the table from the
+    seen union on resume, record the format its seen set sizes, and match
+    the oracle for two more batches."""
     import numpy as np
 
     from openalex_collaboration_crawler_spark.streaming.seen import fixed_bloom_build_blob
 
     orc = _mk_oracle(spark, world)
     orc.run(max_batches=4)
+    # name -> (schema, rows(hashes, parts, fmt now), recorded format(fmt now))
     legacy = {
         "blob": (
             "part int, blob binary",
-            lambda h, parts: [
+            lambda h, parts, cur: [
                 (p, fixed_bloom_build_blob(h[np.mod(h, parts) == p].view(np.uint64), 1 << 20, 5))
                 for p in range(parts)
             ],
-            None,
+            lambda cur: None,
         ),
         "fixed_words": (
             "part int, words array<bigint>",
-            lambda h, parts: _old_words(h, parts, 1 << 20, 5),
-            {"layout": "words", "parts": 4, "m_bits": 1 << 20, "k": 5},
+            lambda h, parts, cur: _old_words(h, parts, 1 << 20, 5),
+            lambda cur: {"layout": "words", "parts": 4, "m_bits": 1 << 20, "k": 5},
+        ),
+        "sized_words": (
+            "part int, words array<bigint>",
+            lambda h, parts, cur: _old_words(h, parts, cur["m_bits"], cur["k"]),
+            lambda cur: {**cur, "layout": "words"},
         ),
     }
     for name, (schema, rows, fmt) in legacy.items():
@@ -239,14 +247,16 @@ def test_legacy_bloom_format_rebuilt_on_resume(spark, world):
         for _ in range(2):
             eng1.run_batch()
         v = eng1.last_version()
-        hashes = np.array(sorted(eng1.seen_hashes()), dtype=np.int64)
-        spark.createDataFrame(rows(hashes, eng1.bloom_parts), schema).write.mode(
-            "overwrite"
-        ).parquet(eng1._path("bloom", f"v{v}"))
         commit_path = os.path.join(eng1._commit_dir(), f"{v}.json")
         with open(commit_path) as f:
             payload = json.load(f)
-        payload["bloom_format"] = fmt
+        cur = eng1._bloom_format(payload["seen_rows"])
+        assert payload["bloom_format"] == cur, name
+        hashes = np.array(sorted(eng1.seen_hashes()), dtype=np.int64)
+        spark.createDataFrame(rows(hashes, eng1.bloom_parts, cur), schema).write.mode(
+            "overwrite"
+        ).parquet(eng1._path("bloom", f"v{v}"))
+        payload["bloom_format"] = fmt(cur)
         with open(commit_path, "w") as f:
             json.dump(payload, f)
 
@@ -553,7 +563,7 @@ def test_metrics_table_merge_on_read(spark, world, engine_run):
 def test_steady_state_batches_compile_nothing(spark, world, compiled_classes):
     """Steady-state batches run classes that are already compiled: the
     session's codegen cache holds a whole batch's working set, and no
-    per-batch value reaches generated source (``_ref_lit_int``). Batch 1
+    per-batch value reaches generated source (``seen.ref_lit``). Batch 1
     compiles the crawl's shapes and batch 2 its first-delta shapes; from
     batch 3 on nothing is new. Bloom dedup from batch 1, the path whose
     recompiles a 100-entry cache showed on every batch."""
@@ -570,27 +580,29 @@ def test_steady_state_batches_compile_nothing(spark, world, compiled_classes):
 
 
 def test_ref_lit_int(spark, compiled_classes):
-    """_ref_lit_int: exact value semantics AND codegen-source stability.
+    """seen.ref_lit: exact value semantics AND codegen-source stability.
 
-    The helper exists so per-batch ids don't force a fresh Janino
-    compile per batch (frontier._ref_lit_int docstring): a new VALUE
-    through the same plan shape must trigger ZERO new stage compiles,
-    while a plain F.lit control shows the counter is live.
+    The helper exists so per-batch values don't force a fresh Janino
+    compile per batch (seen.ref_lit docstring): a new VALUE through the
+    same plan shape must trigger ZERO new stage compiles, while a plain
+    F.lit control shows the counter is live.
+
+    The index column is Range's ``id``, which is not nullable: the
+    case where Catalyst would fold ``id * 0`` to 0 and inline the value.
 
     Coupled to the Spark version (written against 4.1): the zero-compile
-    result holds only while Catalyst has no ``x * 0`` simplification for
-    non-foldable expressions and keeps ``rand`` flagged nondeterministic.
-    If an upgrade fails the ``c1 - c0 == 0`` assert while the value check
-    passes, one of those optimizer rules changed; values stay correct and
-    only the per-batch recompiles come back."""
+    result holds only while Catalyst has no ``x & 0`` simplification for
+    non-foldable expressions. If an upgrade fails the ``c1 - c0 == 0``
+    assert while the value check passes, that optimizer rule changed;
+    values stay correct and only the per-batch recompiles come back."""
     from pyspark.sql import functions as F
 
-    from openalex_collaboration_crawler_spark.streaming.frontier import _ref_lit_int
+    from openalex_collaboration_crawler_spark.streaming.seen import ref_lit
 
     # exact value, row-invariant
     vals = (
         spark.range(5)
-        .select(_ref_lit_int(37).cast("int").alias("b"))
+        .select(ref_lit(37, F.col("id")).cast("int").alias("b"))
         .collect()
     )
     assert [r.b for r in vals] == [37] * 5
@@ -600,13 +612,13 @@ def test_ref_lit_int(spark, compiled_classes):
             (F.col("id") + 1).alias("id2"), col.cast("int").alias("b")
         ).write.format("noop").mode("overwrite").save()
 
-    run(_ref_lit_int(100))  # warm the shape (pays its one compile)
+    run(ref_lit(100, F.col("id")))  # warm the shape (pays its one compile)
     run(F.lit(100))
     c0 = compiled_classes()
-    run(_ref_lit_int(101))
-    run(_ref_lit_int(102))
+    run(ref_lit(101, F.col("id")))
+    run(ref_lit(102, F.col("id")))
     c1 = compiled_classes()
-    assert c1 - c0 == 0, "new _ref_lit_int values must reuse the compiled stage"
+    assert c1 - c0 == 0, "new ref_lit values must reuse the compiled stage"
     run(F.lit(101))
     c2 = compiled_classes()
     assert c2 - c1 > 0, "control: a new inlined literal must recompile"
